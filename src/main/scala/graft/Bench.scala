@@ -304,8 +304,13 @@ object Bench {
       val ms = v.map(_._2.json).mkString("[", ",", "]")
       s""""$n":{"rep_sec":$ts,"rep_metrics":$ms}"""
     }.mkString("{", ",", "}")
+    // memo builds / hits / build seconds per name, over the whole run
+    // (warm-up included)
+    val memoJson = graft.util.Memo.stats.toSeq.sortBy(_._1).map { case (n, st) =>
+      s""""$n":{"builds":${st.builds},"hits":${st.hits},"build_s":${fmt3(st.buildSeconds)}}"""
+    }.mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","raw_total":$rawTotal,$protocolJson,"medians3":$mediansJson,"spikes":$spikesJson,"queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","raw_total":$rawTotal,$protocolJson,"medians3":$mediansJson,"spikes":$spikesJson,"queries":$qs,"errors":$errs,"memo":$memoJson,"sf":"$sfDir"}"""
     // The full per-query line exceeds a tail-capture window at 150+
     // queries, so a capture that keeps only the LAST few KB beheads it
     // into unparseable JSON (every BENCH_r{5..10} landed "parsed": null).

@@ -3,41 +3,19 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-import graft.functions.{BigramCounts, CosineSimilarity, FirstBandMatch, LshBucket, SigMatchCount, Simhash60}
+import org.apache.spark.sql.graft.GraftFunctions
 
 /** SparkSessionExtensions entry point: enable with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` to get the
   * engine's native expressions in SQL. (Sessions we don't build — the
   * driver-owned ones — use [[org.apache.spark.sql.graft.GraftFunctions]]
-  * to register post-hoc instead.)
+  * to register post-hoc instead; both paths inject the same table.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      exprs => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_lsh_bucket"),
-      new ExpressionInfo(classOf[LshBucket].getName, "graft_lsh_bucket"),
-      exprs => LshBucket(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash60"),
-      new ExpressionInfo(classOf[Simhash60].getName, "graft_simhash60"),
-      exprs => Simhash60(exprs(0))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bigram_counts"),
-      new ExpressionInfo(classOf[BigramCounts].getName, "graft_bigram_counts"),
-      exprs => BigramCounts(exprs(0))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_sig_match"),
-      new ExpressionInfo(classOf[SigMatchCount].getName, "graft_sig_match"),
-      exprs => SigMatchCount(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_first_band_match"),
-      new ExpressionInfo(classOf[FirstBandMatch].getName, "graft_first_band_match"),
-      exprs => FirstBandMatch(exprs(0), exprs(1), exprs(2))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.natives.foreach { case (name, cls, build) =>
+      ext.injectFunction(
+        (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
 }

@@ -440,8 +440,7 @@ object Joins {
     * them (the dppFactDir discipline). Table names carry the corpus
     * hash: the external catalog is JVM-shared across sessions.
     */
-  private val bucketedPairs =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  private val bucketedLock = new Object
 
   private def bucketedPair(s: SparkSession, d: String): (String, String) = {
     // tag = sanitized path (readability) + full md5 of the RAW path
@@ -453,13 +452,11 @@ object Joins {
       .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val tag = d.replaceAll("[^a-zA-Z0-9]", "_").stripPrefix("_")
       .takeRight(40).toLowerCase + "_" + digest
-    val names = bucketedPairs.computeIfAbsent(d, _ =>
-      (s"graft_orders_b_$tag", s"graft_customer_b_$tag"))
-    val (ot, ct) = names
+    val (ot, ct) = (s"graft_orders_b_$tag", s"graft_customer_b_$tag")
     // existence-checked, not cache-trusted: a fresh catalog in the same
     // JVM (stopped/recreated context) must rebuild, not throw NOT_FOUND;
     // serialized so concurrent sessions can't race the check-then-build
-    bucketedPairs.synchronized {
+    bucketedLock.synchronized {
       if (!s.catalog.tableExists(ot) || !s.catalog.tableExists(ct)) {
         val base = graft.util.TempDirs.create("graft_bucketed").toString
         Tables.read(s, d, "orders").write.mode("overwrite")
@@ -470,7 +467,7 @@ object Joins {
           .bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable(ct)
       }
     }
-    names
+    (ot, ct)
   }
 
   /** Bucketed co-located join — the pay-the-shuffle-once layout for

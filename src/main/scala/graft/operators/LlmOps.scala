@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.{Q, Tables}
 import graft.util.Checkpoints.Truncate
+import graft.util.Memo
 
 /** SURVEY §2.8 — LLM-training-data pipeline operators (all EXT;
   * `BASELINE.json` north_star: dedup, similarity search, multimodal columns,
@@ -27,25 +28,6 @@ import graft.util.Checkpoints.Truncate
   */
 object LlmOps {
 
-  /** Distinct (doc_id, token) pairs — the inverted-index building block. */
-  private val tokenCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (DataFrame, DataFrame)]()
-
-  Tables.registerEvictor(uuid =>
-    Tables.evictSessionEntries(tokenCache, uuid) { case (a, b) => Seq(a, b) })
-
-  private val shardPairCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  Tables.registerEvictor(uuid =>
-    Tables.evictSessionEntries(shardPairCache, uuid)(df => Seq(df)))
-
-  private val anchorCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  Tables.registerEvictor(uuid =>
-    Tables.evictSessionEntries(anchorCache, uuid)(df => Seq(df)))
-
   /** The `vec_id % 25 = 0` probe-anchor batch shared by
     * [[llmHardNegativeMine]] and [[llmKnnLabelProbe]] — built once per
     * (session, corpus) with its broadcast-budget gate resolved at build
@@ -56,7 +38,7 @@ object LlmOps {
     * the subtree, so it survives the rename projection).
     */
   private def probeAnchors(s: SparkSession, d: String): DataFrame =
-    anchorCache.computeIfAbsent((Tables.sessionKey(s), d), _ => {
+    Memo.session(s, d, "probe_anchors") {
       val a0 = Tables.read(s, d, "embeddings")
         .filter(col("vec_id") % 25 === 0)
         .select(col("vec_id").as("anchor_id"), col("embedding").as("a_emb"),
@@ -64,13 +46,7 @@ object LlmOps {
       val budget = 100000L
       if (a0.limit((budget + 1).toInt).count() <= budget) broadcast(a0)
       else a0
-    })
-
-  private val recallAnchorCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), DataFrame]()
-
-  Tables.registerEvictor(uuid =>
-    Tables.evictSessionEntries(recallAnchorCache, uuid)(df => Seq(df)))
+    }
 
   /** The `vec_id % 50 = 0` bucketed probe-anchor batch of
     * [[llmAnnRecallEval]] — same budget-gated-broadcast pattern as
@@ -79,10 +55,10 @@ object LlmOps {
     * invocation per bench rep.
     */
   private def recallAnchors(s: SparkSession, d: String, nBits: Int): DataFrame =
-    // nBits is part of the key: the cached batch's a_bucket values are a
+    // nBits is part of the name: the cached batch's a_bucket values are a
     // function of it, so a second caller with a different plane count
     // must not be served the first caller's buckets
-    recallAnchorCache.computeIfAbsent((Tables.sessionKey(s), d, nBits), _ => {
+    Memo.session(s, d, s"recall_anchors/$nBits") {
       org.apache.spark.sql.graft.GraftFunctions.register(s)
       val a0 = Tables.read(s, d, "embeddings")
         .filter(col("vec_id") % 50 === 0)
@@ -92,7 +68,7 @@ object LlmOps {
       val budget = 100000L
       if (a0.limit((budget + 1).toInt).count() <= budget) broadcast(a0)
       else a0
-    })
+    }
 
   /** The `doc_id % 5 = 1` sharded exact-Jaccard τ=0.9 edge list shared by
     * `llm_dedup_keep_best` and the four oracle-checked graph ops —
@@ -102,9 +78,10 @@ object LlmOps {
     * bench/verify sweep.
     */
   def shardedJaccardPairs(s: SparkSession, d: String): DataFrame =
-    shardPairCache.computeIfAbsent((Tables.sessionKey(s), d), _ =>
+    Memo.session(s, d, "sharded_jaccard_pairs") {
       jaccardPairs(s, docTokens(s, d).filter(col("doc_id") % lit(5) === 1))
-        .select(col("id1"), col("id2")).truncated)
+        .select(col("id1"), col("id2")).truncated
+    }
 
   /** Distinct (doc, token) table + k=16 minhash signatures, materialized
     * once per (session, corpus): four registry ops fan out of the token
@@ -112,20 +89,17 @@ object LlmOps {
     * discipline as [[simhashPairs]]. Sharing SIGNATURES between the
     * broadcast and forced-shuffle minhash keys is exactly what the
     * banded key exists to prove: same inputs, different pair-generation
-    * plan, spec-identical output. Keyed by [[Tables.sessionKey]]'s
-    * per-session UUID (a DataFrame-valued map keyed on the session
-    * itself would pin it forever — DataFrames reference their session);
-    * retention is bounded by (sessions × corpora) per JVM, like
-    * `Tables.planCache`.
+    * plan, spec-identical output. Session-scoped in [[graft.util.Memo]]:
+    * dropped and unpersisted once the session dies.
     */
   private[operators] def corpusToksAndSigs(s: SparkSession, d: String)
       : (DataFrame, DataFrame) =
-    tokenCache.computeIfAbsent((Tables.sessionKey(s), d), _ => {
+    Memo.session(s, d, "corpus_toks_sigs") {
       val toks = Tables.read(s, d, "documents")
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
         .distinct().cache()
       (toks, minhashSigs(toks).cache())
-    })
+    }
 
   private[graft] def docTokens(s: SparkSession, d: String): DataFrame =
     corpusToksAndSigs(s, d)._1
@@ -750,25 +724,19 @@ object LlmOps {
     * (link prediction), NOT for the dedup ops, which stay at the
     * complete ≤3 default.
     */
-  private val simhashPairCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), DataFrame]()
-
-  Tables.registerEvictor(uuid =>
-    Tables.evictSessionEntries(simhashPairCache, uuid)(Seq(_)))
-
   /** Cached entry point: SIX registry ops consume the pair table
     * (simhash dedup, cluster resolution, the four graph ops), and each
     * recomputing the corpus-scan + hashing subtree is exactly the
     * repeated-shared-subtree shape the scan audit exists to prevent —
     * a production pipeline materializes the pair table once and fans
-    * out. Keyed by the per-session UUID ([[Tables.sessionKey]] — see
-    * [[corpusToksAndSigs]] for why not the session itself) plus
-    * (corpus, radius); the cache holds a lazy `.cache()`d plan, so the
-    * first consumer materializes and the rest read memory.
+    * out. Session-scoped in [[graft.util.Memo]] per (corpus, radius); the
+    * memo holds a lazy `.cache()`d plan, so the first consumer
+    * materializes and the rest read memory.
     */
   def simhashPairs(s: SparkSession, d: String, maxHamming: Int = 3): DataFrame =
-    simhashPairCache.computeIfAbsent((Tables.sessionKey(s), d, maxHamming),
-      _ => computeSimhashPairs(s, d, maxHamming).cache())
+    Memo.session(s, d, s"simhash_pairs/$maxHamming") {
+      computeSimhashPairs(s, d, maxHamming).cache()
+    }
 
   private def computeSimhashPairs(s: SparkSession, d: String,
                                   maxHamming: Int): DataFrame = {
@@ -3679,9 +3647,6 @@ object LlmOps {
             FROM documents JOIN embeddings ON doc_id = vec_id
             ORDER BY doc_id NULLS FIRST"""))
 
-  private val pngBlobDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Deterministic grayscale-PNG fixture for [[llmMultimodalFeatures]]:
     * one REAL 8-bit PNG per doc of the `doc_id % 100 = 7` shard, with
     * dimensions and every pixel value in closed form of `doc_id` —
@@ -3695,7 +3660,7 @@ object LlmOps {
     * partition-parallel read + decode.
     */
   private[operators] def pngBlobsDir(s: SparkSession, d: String): String =
-    pngBlobDirs.computeIfAbsent(d, _ => {
+    Memo.corpus(d, "png_blobs") {
       val dir = graft.util.TempDirs.create("graft_png_blobs")
       Tables.read(s, d, "documents")
         .filter(col("doc_id") % 100 === 7)
@@ -3720,7 +3685,7 @@ object LlmOps {
           require(ok, s"no PNG writer available for doc $id")
         }
       dir.toString
-    })
+    }
 
   /** Multimodal feature extraction over an opaque binary column, via the
     * typed per-partition batch surface (the real plumbing for image

@@ -10,6 +10,7 @@ import graft.{Q, Tables}
 import graft.sources.{CdcEnvelope, TypeMap}
 import graft.streaming.StreamRunner
 import graft.util.Checkpoints.Truncate
+import graft.util.Memo
 
 /** SURVEY §2.1 — sources / sinks / CDC core. */
 object SourceOps {
@@ -343,18 +344,15 @@ object SourceOps {
     * function of the corpus, exactly the [[graft.streaming.StreamingOps]]
     * late-split discipline).
     */
-  private val dppDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def dppFactDir(s: SparkSession, d: String): String =
-    dppDirs.computeIfAbsent(d, _ => {
+    Memo.corpus(d, "dpp_fact") {
       val dir = graft.util.TempDirs.create("graft_dpp").resolve("fact").toString
       Tables.read(s, d, "events")
         .select(col("event_id"), col("user_id"), col("value"),
           expr("(ts div 1000) div 86400000000").as("day"))
         .write.partitionBy("day").parquet(dir)
       dir
-    })
+    }
 
   /** Dynamic partition pruning — the star-join runtime optimization that
     * static pruning ([[srcPartitionedRoundtrip]]) cannot express: the
@@ -1214,16 +1212,13 @@ object SourceOps {
     * produce exactly this). Built once: the FRAGMENTATION is fixture,
     * the compaction is the op.
     */
-  private val fragmentedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[operators] def fragmentedOrdersDir(s: SparkSession, d: String): String =
-    fragmentedDirs.computeIfAbsent(d, _ => {
+    Memo.corpus(d, "fragmented_orders") {
       val dir = graft.util.TempDirs.create("graft_frag").resolve("orders").toString
       Tables.read(s, d, "orders").repartition(64)
         .write.mode("overwrite").parquet(dir)
       dir
-    })
+    }
 
   /** Bin-pack + range-compact the fragmented table into ~target-size
     * files keyed by `o_orderkey`; returns the compacted dir. Factored
@@ -1285,11 +1280,8 @@ object SourceOps {
     * snapshot (rows with event_id % 7 ≠ 0) — one materialized view per
     * (JVM, corpus), the fixture [[sinkMvIncrementalRefresh]] refreshes.
     */
-  private val mvDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[operators] def mvBaseDir(s: SparkSession, d: String): String =
-    mvDirs.computeIfAbsent(d, _ => {
+    Memo.corpus(d, "mv_base") {
       val dir = graft.util.TempDirs.create("graft_mv").resolve("mv").toString
       Tables.read(s, d, "events")
         .filter(col("event_id") % lit(7) =!= 0)
@@ -1300,7 +1292,7 @@ object SourceOps {
         .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
         .write.partitionBy("day").parquet(dir)
       dir
-    })
+    }
 
   /** Incremental materialized-view maintenance — the aggregate
     * counterpart of [[sinkUpsertLatestByKey]] and the standard warehouse
@@ -1507,16 +1499,6 @@ object SourceOps {
       }.mkString("", " UNION ALL ", " ORDER BY column_name NULLS FIRST")
     })
 
-  /** One deliberately-fragmented copy of `events` per (JVM, corpus) —
-    * 64 tiny files with every user's rows scattered across them: the
-    * layout a keyed CDC micro-batch sink leaves behind, and the input
-    * shape ClickHouse's background merge consumes. Projected to the
-    * upsert op's 5 portable columns (µs timestamps; raw nanos are
-    * Spark-only).
-    */
-  private val binBlobDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Fixture for [[srcBinaryFiles]]: one opaque blob file per doc of the
     * deterministic `doc_id % 100 = 7` shard (the doc's UTF-8 text bytes
     * standing in for an image/audio payload, as in
@@ -1525,7 +1507,7 @@ object SourceOps {
     * is the partition-parallel `binaryFile` READ.
     */
   private[operators] def binaryBlobsDir(s: SparkSession, d: String): String =
-    binBlobDirs.computeIfAbsent(d, _ => {
+    Memo.corpus(d, "binary_blobs") {
       val dir = graft.util.TempDirs.create("graft_bin_blobs")
       Tables.read(s, d, "documents")
         .filter(col("doc_id") % 100 === 7)
@@ -1535,7 +1517,7 @@ object SourceOps {
             r.getString(1).getBytes("UTF-8"))
         }
       dir.toString
-    })
+    }
 
   /** Opaque-binary ingestion via Spark's `binaryFile` source — the first
     * step of every multimodal pipeline (image/audio/video corpora arrive
@@ -1569,11 +1551,15 @@ object SourceOps {
             FROM documents WHERE doc_id % 100 = 7
             ORDER BY doc_id NULLS FIRST"""))
 
-  private val fragEventsDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** One deliberately-fragmented copy of `events` per (JVM, corpus) —
+    * 64 tiny files with every user's rows scattered across them: the
+    * layout a keyed CDC micro-batch sink leaves behind, and the input
+    * shape ClickHouse's background merge consumes. Projected to the
+    * upsert op's 5 portable columns (µs timestamps; raw nanos are
+    * Spark-only).
+    */
   private[operators] def fragmentedEventsDir(s: SparkSession, d: String): String =
-    fragEventsDirs.computeIfAbsent(d, _ => {
+    Memo.corpus(d, "fragmented_events") {
       val dir = graft.util.TempDirs.create("graft_frag_ev").resolve("events").toString
       Tables.read(s, d, "events")
         .select(col("user_id"), col("event_id"), col("event_type"),
@@ -1581,7 +1567,7 @@ object SourceOps {
         .repartition(64)
         .write.mode("overwrite").parquet(dir)
       dir
-    })
+    }
 
   /** The fused merge: ONE range shuffle on the key, in-partition sort
     * (key asc, version desc), then a streaming first-row-per-key pass —
@@ -1667,18 +1653,15 @@ object SourceOps {
     * compaction arithmetic; the 16 granules here keep the skipping
     * behavior observable at every test sf.
     */
-  private val zonemapDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[operators] def zonemapLayoutDir(s: SparkSession, d: String): String =
-    zonemapDirs.computeIfAbsent(d, _ => {
+    Memo.corpus(d, "zonemap_layout") {
       val dir = graft.util.TempDirs.create("graft_zonemap").resolve("orders").toString
       Tables.read(s, d, "orders")
         .repartitionByRange(16, col("o_orderkey"))
         .sortWithinPartitions("o_orderkey")
         .write.mode("overwrite").parquet(dir)
       dir
-    })
+    }
 
   /** Build the per-file zone map and prune it for the mid-corpus key
     * box: returns (selected files, total files, lo, hi) — the spec seam
@@ -1751,13 +1734,6 @@ object SourceOps {
             GROUP BY o_orderpriority
             ORDER BY o_orderpriority NULLS FIRST"""))
 
-  /** Fixture + index state for the INCREMENTAL zone map: value is
-    * (layout dir, updated per-file (path, min, max) index, delta file
-    * paths, total file count). One build per corpus dir per JVM.
-    */
-  private val zonemapIncrState = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[(String, Long, Long)], Seq[String], Int)]()
-
   /** Zone-map maintenance under a late append — the index-refresh half
     * [[opZonemapPrune]] leaves implicit: a 16-file range layout is
     * indexed, then a 2-file UNSORTED tail (`o_orderkey % 10 = 3`, each
@@ -1770,11 +1746,13 @@ object SourceOps {
     * appended bytes, the same delta discipline as the MV refreshes. At
     * 100 TB this is the manifest-diff loop every lakehouse table
     * service runs; a full rebuild would re-footer every file on every
-    * append.
+    * append. Returns (layout dir, updated per-file (path, min, max)
+    * index, delta file paths, total file count), built once per corpus
+    * per JVM.
     */
   private[operators] def zonemapIncremental(s: SparkSession, d: String)
       : (String, Seq[(String, Long, Long)], Seq[String], Int) =
-    zonemapIncrState.computeIfAbsent(d, _ => {
+    Memo.corpus(d, "zonemap_incremental") {
       val dir = graft.util.TempDirs.create("graft_zonemap_incr")
         .resolve("orders").toString
       val orders = Tables.read(s, d, "orders")
@@ -1793,7 +1771,7 @@ object SourceOps {
       val delta = all.filterNot(p => indexed(p.split('/').last))
       val deltaIdx = graft.util.Fs.footerLongStats(s, delta, "o_orderkey")
       (dir, baseIdx ++ deltaIdx, delta, all.size)
-    })
+    }
 
   /** Incremental zone-map pruned scan: the key-box query of
     * [[opZonemapPrune]] answered from the POST-APPEND index — proving the
@@ -1852,11 +1830,8 @@ object SourceOps {
     * user hashes as of the base snapshot (event_id % 7 ≠ 0) — the
     * sketch-partial MV [[sinkMvSketchRefresh]] refreshes.
     */
-  private val mvSketchDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[operators] def mvSketchBaseDir(s: SparkSession, d: String): String =
-    mvSketchDirs.computeIfAbsent(d, _ => {
+    Memo.corpus(d, "mv_sketch_base") {
       val dir = graft.util.TempDirs.create("graft_mv_sketch").resolve("mv").toString
       val kmvM = udaf(new graft.functions.KmvMinima(64))
       Tables.read(s, d, "events")
@@ -1867,7 +1842,7 @@ object SourceOps {
         .agg(kmvM(col("hv")).as("mins"))
         .write.partitionBy("day").parquet(dir)
       dir
-    })
+    }
 
   /** Run the sketch-MV refresh write; returns (mv0 dir, refreshed dir,
     * touched days) — the [[CompactionSpec]] seam.
@@ -2006,11 +1981,8 @@ object SourceOps {
     * sharing is the format's concern; the READ semantics are what this
     * op reproduces).
     */
-  private val timeTravelDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[operators] def timeTravelChainDir(s: SparkSession, d: String): String =
-    timeTravelDirs.computeIfAbsent(d, _ => {
+    Memo.corpus(d, "time_travel_chain") {
       val base = graft.util.TempDirs.create("graft_time_travel").toString
       val v0 = Tables.read(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -2028,7 +2000,7 @@ object SourceOps {
       v1.write.parquet(s"$base/v1")
       v1.filter(col("o_orderkey") % 11 =!= 5).write.parquet(s"$base/v2")
       base
-    })
+    }
 
   /** Time-travel read — the lakehouse `VERSION AS OF` surface
     * (Delta/Iceberg snapshot reads; the reference's analogue is querying
@@ -2083,12 +2055,9 @@ object SourceOps {
     *        references b0_g0, b1_g1, b2_g0, b3_g0;
     *   v2 = keys `% 8 = 6` deleted (all live in bucket 2) → b2_g2.
     */
-  private val vacuumState = new java.util.concurrent.ConcurrentHashMap[
-    String, (Map[Int, Seq[String]], Seq[String], Seq[String], Seq[String])]()
-
   private[operators] def vacuumChain(s: SparkSession, d: String)
       : (Map[Int, Seq[String]], Seq[String], Seq[String], Seq[String]) =
-    vacuumState.computeIfAbsent(d, _ => {
+    Memo.corpus(d, "vacuum_chain") {
       val base = graft.util.TempDirs.create("graft_vacuum").toString
       val orders = Tables.read(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -2120,23 +2089,18 @@ object SourceOps {
       orphans.foreach(p =>
         graft.util.TempDirs.deleteRecursively(java.nio.file.Paths.get(p)))
       (manifests, manifests(2), orphans, allDirs)
-    })
-
-  /** Fixture + index for the bloom skip index: (layout dir, per-file
-    * serialized bloom sketches). One build per corpus per JVM.
-    */
-  private val bloomIdxState = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[(String, Array[Byte])])]()
+    }
 
   /** 16-file doc_id-range layout of documents + a per-file bloom over
     * `xxhash64(md5(text))` — the content-digest point-lookup index. The
     * build is ONE scan (at 100 TB it rides the layout write itself, or
     * parquet's own column bloom filters); the index is O(#files × KB)
-    * driver state, the zone-map budget class.
+    * driver state, the zone-map budget class. Returns (layout dir,
+    * per-file serialized bloom sketches), built once per corpus per JVM.
     */
   private[operators] def bloomSkipIndex(s: SparkSession, d: String)
       : (String, Seq[(String, Array[Byte])]) =
-    bloomIdxState.computeIfAbsent(d, _ => {
+    Memo.corpus(d, "bloom_skip_index") {
       val dir = graft.util.TempDirs.create("graft_bloom_idx")
         .resolve("documents").toString
       org.apache.spark.sql.graft.GraftFunctions.register(s)
@@ -2151,7 +2115,7 @@ object SourceOps {
           .as("bf"))
         .collect().map(r => (r.getString(0), r.getAs[Array[Byte]](1))).toSeq
       (dir, idx)
-    })
+    }
 
   /** Bloom-filter skip index point lookup — the reference sink's
     * `bloom_filter` SKIP INDEX (ClickHouse data-skipping indexes for
@@ -2363,12 +2327,6 @@ object SourceOps {
             WHERE NOT (op = 'D' AND t_key IS NOT NULL) OR op IS NULL
             ORDER BY o_orderkey NULLS FIRST"""))
 
-  /** Fixture + result state for write-audit-publish: (manifest path,
-    * audit log of (candidate, check, passed), published data dir).
-    */
-  private val wapState = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[(String, String, Boolean)], String)]()
-
   /** One WAP cycle: stage `candidate` under `base/staging/<name>`, run
     * the intrinsic audits (non-empty; no NULL day; (day, event_type)
     * unique — ONE aggregate pass over the staged files), and publish by
@@ -2415,11 +2373,13 @@ object SourceOps {
     * THROUGH the manifest, so the oracle hash-checks that the corrupt
     * candidate never leaked; Round18Spec pins the staged-but-unpublished
     * directory and the audit log. At 100 TB: audits are one agg over the
-    * staged files, publish is an O(1) metadata swap.
+    * staged files, publish is an O(1) metadata swap. Returns (manifest
+    * path, audit log of (candidate, check, passed), published data dir),
+    * built once per corpus per JVM.
     */
   private[operators] def wapPublish(s: SparkSession, d: String)
       : (String, Seq[(String, String, Boolean)], String) =
-    wapState.computeIfAbsent(d, _ => {
+    Memo.corpus(d, "wap_publish") {
       val base = graft.util.TempDirs.create("graft_wap").toString
       val daily = Tables.read(s, d, "events")
         .groupBy(expr("(ts div 1000) div 86400000000").as("day"),
@@ -2435,7 +2395,7 @@ object SourceOps {
       val published = new String(Files.readAllBytes(
         Paths.get(s"$base/MANIFEST")), "UTF-8")
       (s"$base/MANIFEST", a1 ++ a2, published)
-    })
+    }
 
   val sinkWapPublish: Q = Q(
     "sink_wap_publish",

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions.{col, from_json}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
+import graft.util.Memo
+
 /** Utilities to run a Structured Streaming pipeline to completion over the
   * finite test corpus and hand back its result as a batch DataFrame.
   *
@@ -19,24 +21,6 @@ import org.apache.spark.sql.types.StructType
 object StreamRunner {
   private val counter = new AtomicInteger(0)
 
-  /** One symlink source dir per (sfDir, table) per JVM — the dir contents
-    * are immutable, so repeated runs of the same query (Bench repetitions)
-    * reuse it instead of re-creating temp dirs.
-    */
-  private val sourceDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  /** Weak-keyed: a stopped-and-dropped parent session (multi-suite test
-    * JVMs stop and recreate sessions) must not be pinned forever by this
-    * cache — WeakHashMap lets the (parent → tuned child) pair be collected
-    * with the parent. The child holds no reference back to the parent
-    * (only the shared SparkContext), so the value never pins its key.
-    * Collections.synchronizedMap gives atomic computeIfAbsent.
-    */
-  private val tunedSessions: java.util.Map[SparkSession, SparkSession] =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, SparkSession]())
-
   /** Streaming queries run on a child session whose shuffle-partition count
     * — which for a stateful op is the number of state-store instances it
     * creates, checkpoints, and commits EVERY micro-batch — is sized to the
@@ -45,10 +29,13 @@ object StreamRunner {
     * results; at real scale this is the knob you RAISE with state size.
     * The child shares the SparkContext; session-level confs the corpus
     * needs (the parquet nanosAsLong flag) are applied by passing the child
-    * itself to `Tables.read`.
+    * itself to `Tables.read`. One child per parent session, session-scoped
+    * in [[Memo]] (no corpus: the tuning is corpus-independent), so it is
+    * dropped with its parent; the child holds no reference back to the
+    * parent (only the shared SparkContext), so the entry never pins it.
     */
-  private[streaming] def tunedSession(spark: SparkSession): SparkSession =
-    tunedSessions.computeIfAbsent(spark, s => {
+  private[streaming] def tunedSession(s: SparkSession): SparkSession =
+    Memo.session(s, "", "tuned_session") {
       val child = s.newSession()
       val parent = s.conf.get("spark.sql.shuffle.partitions", "8").toInt
       child.conf.set("spark.sql.shuffle.partitions", math.min(8, parent).toString)
@@ -87,7 +74,7 @@ object StreamRunner {
             == "org.apache.hadoop.fs.local.LocalFs")
         hc.set(fsKey, "org.apache.hadoop.fs.local.RawLocalFs")
       child
-    })
+    }
 
   /** Stream a corpus parquet table. File streaming needs an explicit schema,
     * so the batch reader supplies it (also triggering the `events`
@@ -112,7 +99,8 @@ object StreamRunner {
     val batch = graft.Tables.read(child, sfDir, name)
     val schema = batch.schema
     val src = java.nio.file.Paths.get(s"$sfDir/$name.parquet")
-    // one cached decision per (sfDir, table) per JVM, for BOTH source
+    // one memoized decision per (sfDir, table) per JVM — the dir contents
+    // are immutable, so Bench repetitions reuse it — for BOTH source
     // shapes: when the raw physical schema matches the canonical batch
     // view, stream the raw layout (a directory as-is, a single file via
     // symlink — the file-stream source demands a directory); when it
@@ -121,7 +109,7 @@ object StreamRunner {
     // so materialize the normalized rows once — written directly INTO the
     // temp dir (the source lists only immediate files; `_SUCCESS` is
     // filtered as hidden).
-    val dir = sourceDirs.computeIfAbsent(s"$sfDir/$name", _ => {
+    val dir = Memo.corpus(sfDir, s"stream_source/$name") {
       val rawMatches = child.read.parquet(src.toString).schema == schema
       if (rawMatches && java.nio.file.Files.isDirectory(src)) src
       else {
@@ -132,7 +120,7 @@ object StreamRunner {
           batch.write.mode("overwrite").parquet(d.toString)
         d
       }
-    })
+    }
     val reader = child.readStream.schema(schema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     reader.parquet(dir.toString)

@@ -8,7 +8,8 @@ package graft.util
   *
   *   1. '''Builds run OUTSIDE the shared lock.''' The map monitor is held
   *      only to look up / insert a memo slot (microseconds); forcing the
-  *      slot's value runs the builder under the SLOT's own lazy-val lock.
+  *      slot's value runs the builder under the SLOT's own lazy-val lock
+  *      ([[Once]], the slot [[Memo]] shares).
   *      Concurrent callers of the SAME key build exactly once; callers of
   *      DIFFERENT keys — and cache hits — never wait behind another key's
   *      build. (The pre-r10 IVF cache built full Spark jobs inside the
@@ -54,7 +55,7 @@ package graft.util
   *     a duplicate build. Correctness is unaffected (builders are pure
   *     and produce independent resources); under heavy same-key churn at
   *     `maxEntries` this wastes builds — if that becomes real, consult a
-  *     secondary in-flight map (key → Slot) cleared on build completion.
+  *     secondary in-flight map (key → Once) cleared on build completion.
   *   - `onRetire` is BEST-EFFORT: it runs on whichever caller thread
   *     happens to drain the queue, must be safe to call concurrently
   *     with readers of OTHER values, and a thrown exception is swallowed
@@ -73,29 +74,13 @@ final class KeyedLazyCache[K, V](
   require(maxEntries > 0, s"maxEntries must be positive, got $maxEntries")
   require(retireKeep >= 0, s"retireKeep must be non-negative, got $retireKeep")
 
-  /** Per-key memo: `lazy val` gives once-only building with the slot —
-    * not the cache — as the synchronization domain. `isBuilt` flips only
-    * AFTER the builder returns, so retirement can distinguish a usable
-    * value from an in-flight or failed build without forcing one. The
-    * builder reference is RELEASED once the value exists: a by-name
-    * builder closes over its caller's scope (for IVF, a DataFrame and
-    * session), which must not stay reachable for the slot's whole cache
-    * residency.
-    */
-  private final class Slot(builder: () => V) {
-    @volatile private var build: () => V = builder
-    @volatile private var built = false
-    lazy val value: V = { val v = build(); built = true; build = null; v }
-    def isBuilt: Boolean = built
-  }
-
   /** Evicted-but-not-yet-retired slots, oldest first. Only mutated under
     * the map monitor (removeEldestEntry fires inside our locked put).
     */
-  private val retiredQ = new java.util.ArrayDeque[Slot]()
+  private val retiredQ = new java.util.ArrayDeque[Once[V]]()
 
-  private val map = new java.util.LinkedHashMap[K, Slot](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[K, Slot]): Boolean = {
+  private val map = new java.util.LinkedHashMap[K, Once[V]](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[K, Once[V]]): Boolean = {
       val evict = size() > maxEntries
       // retire-eligibility is decided HERE, not at drain time: a slot
       // still mid-build now may finish before the drain runs, and
@@ -119,8 +104,8 @@ final class KeyedLazyCache[K, V](
   def getOrBuild(key: K)(build: => V): V = {
     val (slot, due) = map.synchronized {
       var s = map.get(key)
-      if (s == null) { s = new Slot(() => build); map.put(key, s) }
-      val drained = Seq.newBuilder[Slot]
+      if (s == null) { s = new Once(() => build); map.put(key, s) }
+      val drained = Seq.newBuilder[Once[V]]
       while (retiredQ.size() > retireKeep) drained += retiredQ.pollFirst()
       (s, drained.result())
     }

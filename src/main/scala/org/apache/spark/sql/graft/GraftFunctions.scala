@@ -1,6 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 import graft.functions.{BigramCounts, CosineSimilarity, FirstBandMatch, LshBucket, SigMatchCount, Simhash60}
 
@@ -10,40 +12,34 @@ import graft.functions.{BigramCounts, CosineSimilarity, FirstBandMatch, LshBucke
   * native expressions on an ALREADY-BUILT session (e.g. the driver-owned
   * Verify/Bench sessions, which we cannot configure with
   * `spark.sql.extensions`). New sessions should prefer
-  * [[graft.GraftExtensions]].
+  * [[graft.GraftExtensions]]; both paths register [[natives]].
   */
 object GraftFunctions {
+
+  /** The graft SQL functions: name, implementing class, builder. Spark's
+    * own bloom-filter aggregate + probe are implemented but NOT exposed in
+    * the public function registry (they back the optimizer's runtime
+    * row-group filtering); surfacing them here gives the dedup /
+    * decontamination prescreens a mergeable O(KB) sketch without any UDF.
+    */
+  val natives: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_cosine", classOf[CosineSimilarity], e => CosineSimilarity(e(0), e(1))),
+    ("graft_lsh_bucket", classOf[LshBucket], e => LshBucket(e(0), e(1))),
+    ("graft_simhash60", classOf[Simhash60], e => Simhash60(e(0))),
+    ("graft_bigram_counts", classOf[BigramCounts], e => BigramCounts(e(0))),
+    ("graft_sig_match", classOf[SigMatchCount], e => SigMatchCount(e(0), e(1))),
+    ("graft_first_band_match", classOf[FirstBandMatch],
+      e => FirstBandMatch(e(0), e(1), e(2))),
+    ("graft_bloom_agg", classOf[BloomFilterAggregate],
+      e => new BloomFilterAggregate(e(0), e(1), e(2)).toAggregateExpression()),
+    ("graft_bloom_contains", classOf[BloomFilterMightContain],
+      e => BloomFilterMightContain(e(0), e(1))))
 
   /** Idempotently register the graft native expressions. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_lsh_bucket", exprs => LshBucket(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_simhash60", exprs => Simhash60(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_bigram_counts", exprs => BigramCounts(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_sig_match", exprs => SigMatchCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_first_band_match",
-      exprs => FirstBandMatch(exprs(0), exprs(1), exprs(2)), "built-in")
-    // Spark's own bloom-filter aggregate + probe are implemented but NOT
-    // exposed in the public function registry (they back the optimizer's
-    // runtime row-group filtering); surfacing them here gives the dedup /
-    // decontamination prescreens a mergeable O(KB) sketch without any UDF
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-        .toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_contains",
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)),
-      "built-in")
+    natives.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }

@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.graft.GraftFunctions
 
@@ -42,7 +44,21 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("GraftExtensions wires the function injections without error") {
-    new graft.GraftExtensions().apply(new SparkSessionExtensions())
+    val injected = scala.collection.mutable.ArrayBuffer[String]()
+    new graft.GraftExtensions().apply(new SparkSessionExtensions {
+      override def injectFunction(f: (FunctionIdentifier, ExpressionInfo,
+          Seq[Expression] => Expression)): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    })
+    // both registration paths expose exactly the same names
+    GraftFunctions.register(spark)
+    val registered = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    assert(injected.size == injected.toSet.size)
+    assert(injected.toSet == registered)
+    assert(registered == GraftFunctions.natives.map(_._1).toSet)
   }
 
   test("graft_lsh_bucket equals VectorMath.lshBucket bit-for-bit, UDF-free plan") {
