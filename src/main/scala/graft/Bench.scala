@@ -134,23 +134,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Per-query repetitions, reporting the MIN: single-shot timings on a
     // contended host swing up to ~6x on identical code (r3->r4 bench
     // "regressions" were byte-identical builds), and the min is the
     // standard noise-robust estimator of a query's true cost.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like Verify: the events TIMESTAMP→epoch-nanos canonicalization
-      // (Tables.canonicalEventTime) is wall-clock arithmetic under the
-      // session time zone — an unpinned zone would time a DIFFERENT query
-      // than the one Verify checks.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // warm-up outside the timed loop: build every table plan (populates
     // the Tables plan cache) and run one tiny scan so JVM/codegen/session
     // warm-up isn't attributed to whichever query happens to run first

@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev tool for the optimization rounds (like [[PlanDump]]): measure the
-  * crossover between [[graft.operators.LlmOps.jaccardPairs]]' two physical
-  * paths — the broadcast bitmask popcount scan (≤64-token vocab) and the
-  * inverted-index posting join — on a SYNTHETIC dense-vocab corpus whose
+/** Dev tool for the optimization rounds: measure the crossover between
+  * [[graft.operators.LlmOps.jaccardPairs]]' two physical paths — the
+  * broadcast bitmask popcount scan (≤64-token vocab) and the inverted-index
+  * posting join — on a SYNTHETIC dense-vocab corpus whose
   * row count is a parameter, so `bitmaskRowBudget` is set from data
   * instead of folklore. Never touched by Verify/Bench; results land in
   * OPTIMIZATION_r<n>.md.
@@ -23,14 +22,7 @@ import org.apache.spark.sql.functions._
 object PairCrossover {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PairCrossover <nDocs> [nDocs...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     args.map(_.trim).filter(_.nonEmpty).foreach { nStr =>
       val n = nStr.toLong
       val toks = spark.range(n)

@@ -172,7 +172,6 @@ object Scale {
     val mode = if (args.length > 2) args(2)
                else sys.env.getOrElse("SPARK_GRAFT_SCALE_MODE", "dense")
     require(mode == "dense" || mode == "sharded", s"unknown mode '$mode'")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
     // deep-k experiment knob: shuffle partitions ∝ data (default = cpus,
     // the bench config). NOTE the k=30 A/B REFUTED the obvious
@@ -181,17 +180,9 @@ object Scale {
     // pair-dedup exchange, both since fixed; SCALE.md r20) — the knob
     // stays because disproving partition-count theories cheaply is
     // exactly what it's for
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // UTC like Verify/Bench: the events ts canonicalization is session-
-      // time-zone arithmetic (Tables.canonicalEventTime)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     // Bench-style warm-up outside every timed loop, so JVM/codegen/session
     // startup isn't attributed to scale=1's first query
     Tables.all.foreach(n => Tables.read(spark, base, n))
@@ -251,7 +242,7 @@ object Scale {
     val json = results.map { case ((k, n), (t, tMax, r)) =>
       s"""{"scale":$k,"query":"$n","sec":$t,"secMax":$tMax,"rows":$r}"""
     }.mkString("[", ",", "]")
-    println(s"""{"metric":"scale_rehearsal","base":"$base","cpus":$cpus,"results":$json}""")
+    println(s"""{"metric":"scale_rehearsal","base":"$base","cpus":${Sessions.cpus},"results":$json}""")
     spark.stop()
   }
 

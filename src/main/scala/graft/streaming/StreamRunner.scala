@@ -66,12 +66,15 @@ object StreamRunner {
       // in this engine is exactly the streaming checkpoint machinery;
       // batch parquet I/O rides the FileSystem API binding (fs.file.impl)
       // and is untouched. A deployment that configured the impl
-      // explicitly (client-side checksums on local staging disks) wins.
+      // explicitly (client-side checksums on local staging disks) wins,
+      // even when it names the default LocalFs: only a value that comes
+      // from Hadoop's own core-default.xml, or none, is replaced.
       val fsKey = "fs.AbstractFileSystem.file.impl"
       val hc = s.sparkContext.hadoopConfiguration
-      if (!s.conf.getAll.contains(s"spark.hadoop.$fsKey") &&
-          hc.get(fsKey, "org.apache.hadoop.fs.local.LocalFs")
-            == "org.apache.hadoop.fs.local.LocalFs")
+      // (`unset` keeps a key's sources, so check the value too)
+      val explicit = hc.get(fsKey) != null &&
+        Option(hc.getPropertySources(fsKey)).exists(_.exists(_ != "core-default.xml"))
+      if (!s.conf.getAll.contains(s"spark.hadoop.$fsKey") && !explicit)
         hc.set(fsKey, "org.apache.hadoop.fs.local.RawLocalFs")
       child
     }

@@ -9,8 +9,14 @@ import org.apache.spark.SparkContext
   * `org.apache.spark.sql.graft.GraftFunctions`; original code).
   */
 object ListenerDrain {
-  /** Block until all queued listener events are delivered (bounded). */
+  /** Block until all queued listener events are delivered (bounded). On
+    * timeout, say so on stderr: metrics snapshotted next may miss events.
+    */
   def drain(sc: SparkContext, timeoutMillis: Long = 10000L): Unit =
     try sc.listenerBus.waitUntilEmpty(timeoutMillis)
-    catch { case _: java.util.concurrent.TimeoutException => () }
+    catch { case _: java.util.concurrent.TimeoutException =>
+      System.err.println(
+        s"[ListenerDrain] listener bus not empty after $timeoutMillis ms; " +
+          "metrics snapshotted now may miss events")
+    }
 }

@@ -7,12 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * so suites don't pay repeated startup).
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   /** Smallest corpus — unit/property tests only need shape + semantics. */
   val sf: String = "/root/testdata/sf0.001"
