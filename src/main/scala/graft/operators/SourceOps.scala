@@ -112,11 +112,15 @@ object SourceOps {
     * (mod 97) → the JSON is truncated mid-schema (syntactically broken),
     * ≡ 1 → valid JSON with the payload field absent (shape drift), ≡ 2 →
     * a NULL wire value (Debezium tombstone — silently dropped per
-    * `transforms.unwrap.drop.tombstones=true`, `setup.sh:107`). Decode is
-    * [[CdcEnvelope.unwrapTolerant]]: ONE codegen'd `from_json` pass, the
-    * good and quarantine legs are filtered projections of the same plan.
-    * Output is the per-status audit the dead-letter log feeds: status,
-    * row count, and (good leg) the event_id sum as an equality probe.
+    * `transforms.unwrap.drop.tombstones=true`, `setup.sh:107`). Routing
+    * is [[CdcEnvelope.unwrapTolerant]]'s, over the same decode schema.
+    * Output is a per-status audit of the messages: status, message count,
+    * and (good leg) the event_id sum as an equality probe. It counts
+    * messages, while `unwrapTolerant`'s quarantine leg holds one row per
+    * distinct `raw`: here every truncated message shares one 40-character
+    * prefix and every payload-less one is the same literal, so a
+    * dead-letter table would hold 2 rows where the audit counts about
+    * N/97 of each kind.
     * Fully deterministic → driver rows-check + golden fixture spec
     * (cross-engine JSON-error semantics differ, so no DuckDB oracle).
     * Scale: corrupt detection is a per-row expression, the audit is one
@@ -138,16 +142,17 @@ object SourceOps {
           .otherwise(cdcEnvelopeJson).as("value"))
       // Single-pass audit: the same classification unwrapTolerant's two
       // legs apply (null wire = tombstone → dropped; null env →
-      // unparseable vs payload-less via try_parse_json; else ok), but
-      // decoded ONCE and folded in one map-side-combinable hash agg —
-      // the two-leg form scans and re-decodes the corpus per leg, which
-      // doubles the dominant from_json cost. unwrapTolerant remains the
-      // streaming-sink API (JdbcUpsertSink) and is golden-spec'd; the
-      // fixture spec pins this audit to the identical routing.
+      // unparseable vs payload-less via try_parse_json; else ok), folded
+      // in one map-side-combinable hash agg that counts messages (the
+      // quarantine leg keeps one row per distinct raw text). unwrapTolerant
+      // keeps its legs as rows for the sinks, from a per-batch persisted
+      // decode; an audit over the whole corpus needs neither the rows nor
+      // the persist. The fixture spec pins this audit to the identical
+      // routing.
       wire.filter(col("value").isNotNull)
         .select(col("value"),
           from_json(col("value"),
-            CdcEnvelope.envelopeSchema(cdcEventsPayload)).as("env"))
+            CdcEnvelope.decodeSchema(cdcEventsPayload)).as("env"))
         .select(
           when(col("env.payload").isNotNull, lit("ok"))
             .when(try_parse_json(col("value")).isNull, lit("unparseable_json"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.BatchRelation
 
 /** ReplacingMergeTree-style keyed upsert semantics (SURVEY §2.1).
   *
@@ -15,13 +16,16 @@ import org.apache.spark.sql.functions._
   * Scale note: one shuffle on the key (window partition), no global sort.
   * At 100 TB the key-partitioned window is the canonical Spark dedup plan;
   * AQE handles skewed keys. `row_number` (not `rank`) keeps exactly one row.
+  * A micro-batch that arrives as one partition (a one-file batch, the JDBC
+  * cursor's one range) sorts in place with no shuffle at all
+  * (`BatchRelation.coalesceIfOnePartition`).
   */
 object Upsert {
 
   /** Keep the latest row per key: version desc, tiebreaks desc. */
   def latestByKey(df: DataFrame, key: Seq[Column], version: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(key: _*).orderBy(version.map(_.desc): _*)
-    df.withColumn("__rn", row_number().over(w))
+    BatchRelation.coalesceIfOnePartition(df).withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
   }
@@ -39,8 +43,8 @@ object Upsert {
     * reference demonstrably lacks (its `setup.sh:192-197` probes a delete
     * but never asserts it reached the sink; `drop.tombstones` guarantees
     * it cannot): the key's state is its latest row version, and if that
-    * latest op is a delete the key is absent from the sink. Same single
-    * key-partitioned window shuffle as [[applyCdc]] — the delete filter
+    * latest op is a delete the key is absent from the sink. Same window
+    * (and so the same shuffle, or none) as [[applyCdc]] — the delete filter
     * is applied AFTER picking the latest version, so a delete followed by
     * a re-insert (higher version) correctly resurrects the key.
     */

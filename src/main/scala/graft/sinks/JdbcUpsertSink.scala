@@ -23,7 +23,11 @@ import graft.sources.CdcEnvelope
   *
   * Scale: work happens on executors via `foreachPartition` — one
   * connection + two prepared statements per partition, JDBC batch API,
-  * nothing on the driver. Partition count = upstream shuffle partitions.
+  * nothing on the driver. One transaction per partition of the batch:
+  * the shuffle partitions of an upstream key dedup as AQE coalesced them
+  * (a small batch's shuffle coalesces to one), or one when the batch
+  * arrives as one partition (then [[graft.operators.Upsert.latestByKey]]
+  * plans no shuffle).
   */
 object JdbcUpsertSink {
 
@@ -78,9 +82,10 @@ object JdbcUpsertSink {
     * `dlqTable (raw VARCHAR, error VARCHAR)` instead of failing the batch.
     *
     * Replay safety: the dead-letter leg reuses the keyed upsert with the raw
-    * message itself as the key, so re-delivered batches (at-least-once)
-    * converge instead of duplicating quarantine rows — the same idempotence
-    * the data leg gets from DELETE-by-key + INSERT.
+    * message itself as the key (unique per batch, see `unwrapTolerant`), so
+    * re-delivered batches (at-least-once) converge instead of duplicating
+    * quarantine rows — the same idempotence the data leg gets from
+    * DELETE-by-key + INSERT.
     *
     * Contract: like [[upsertBatch]], the decoded batch must be key-unique —
     * for multi-change-per-key batches compose

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.BatchRelation
 import org.apache.spark.sql.types._
 
 /** Debezium-style CDC envelope decode (SURVEY §1.2 / §2.1).
@@ -11,7 +12,7 @@ import org.apache.spark.sql.types._
   * per row-change: `{"schema": {...struct descriptor...}, "payload": {col: val}}`
   * with timestamps as int64 microseconds (`io.debezium.time.MicroTimestamp`).
   *
-  * Spark mapping: the envelope is a `StructType`; decode is `from_json` (a
+  * Spark mapping: decode is `from_json` into `struct<payload: P>` (a
   * codegen'd expression — stays inside WholeStageCodegen, no UDF), unwrap is
   * `select("payload.*")` (the `ExtractNewRecordState` SMT of reference
   * `setup.sh:105-107`), and MicroTimestamp columns become TIMESTAMP via
@@ -19,23 +20,13 @@ import org.apache.spark.sql.types._
   */
 object CdcEnvelope {
 
-  /** Descriptor of one field inside the envelope's `schema.fields` array. */
-  val fieldDescriptor: StructType = StructType(Seq(
-    StructField("type", StringType),
-    StructField("optional", BooleanType),
-    StructField("default", StringType),
-    StructField("name", StringType),
-    StructField("version", IntegerType),
-    StructField("field", StringType)))
-
-  /** Full envelope schema for a given payload row schema. */
-  def envelopeSchema(payload: StructType): StructType = StructType(Seq(
-    StructField("schema", StructType(Seq(
-      StructField("type", StringType),
-      StructField("fields", ArrayType(fieldDescriptor)),
-      StructField("optional", BooleanType),
-      StructField("name", StringType)))),
-    StructField("payload", payload)))
+  /** Decode schema for a payload row schema: `struct<payload: P>`. The
+    * envelope's `schema` descriptor is the same on every message of a topic
+    * version, so `from_json` skips it rather than building it per row;
+    * building it cost about as much as the rest of the decode.
+    */
+  def decodeSchema(payload: StructType): StructType =
+    StructType(Seq(StructField("payload", payload)))
 
   /** Payload schema of the reference's `iman.users` table
     * (`postgres-init/init.sql:5-11`); MicroTimestamp columns arrive as int64.
@@ -47,16 +38,23 @@ object CdcEnvelope {
     StructField("updated_at", LongType),
     StructField("created_at", LongType)))
 
+  /** `env.payload.*`, with the named int64-µs columns as timestamps. */
+  private def payloadColumns(payload: StructType, microTsCols: Seq[String]): Seq[Column] = {
+    require(microTsCols.forall(payload.fieldNames.contains),
+      s"microTsCols not in the payload: ${microTsCols.filterNot(payload.fieldNames.contains).mkString(", ")}")
+    payload.fieldNames.toSeq.map { f =>
+      val c = col("env.payload").getField(f)
+      (if (microTsCols.contains(f)) timestamp_micros(c) else c).as(f)
+    }
+  }
+
   /** Decode + flatten a column of envelope JSON strings: `payload.*` with the
     * named int64-µs columns converted to timestamps.
     */
   def unwrap(df: DataFrame, jsonCol: Column, payload: StructType,
-             microTsCols: Seq[String] = Seq.empty): DataFrame = {
-    val decoded = df.select(from_json(jsonCol, envelopeSchema(payload)).as("env"))
-      .select(col("env.payload.*"))
-    microTsCols.foldLeft(decoded)((d, c) =>
-      d.withColumn(c, timestamp_micros(col(c))))
-  }
+             microTsCols: Seq[String] = Seq.empty): DataFrame =
+    df.select(from_json(jsonCol, decodeSchema(payload)).as("env"))
+      .select(payloadColumns(payload, microTsCols): _*)
 
   /** Convenience: decode reference `iman.users` envelopes. */
   def unwrapUsers(df: DataFrame, jsonCol: Column): DataFrame =
@@ -69,31 +67,33 @@ object CdcEnvelope {
     *
     * Returns (good, quarantine). `good` is the same shape as [[unwrap]];
     * `quarantine` is `(raw STRING, error STRING)` — the raw wire bytes plus
-    * a reason tag, ready for a dead-letter sink. Null wire values are
-    * tombstones and are silently dropped from both legs (reference
-    * `transforms.unwrap.drop.tombstones=true`, `setup.sh:107`). `from_json`
-    * is a codegen'd expression evaluated once per row; the two legs are
-    * filtered projections of the same decoded plan (in `foreachBatch` the
-    * batch is already materialized, so no double scan of the source).
+    * a reason tag, ready for a dead-letter sink, one row per distinct `raw`
+    * (the tag is a function of `raw`), so a dead-letter table keyed on
+    * `raw` takes a redelivered or repeated bad message in one batch. Null
+    * wire values are tombstones and are silently dropped from both legs
+    * (reference `transforms.unwrap.drop.tombstones=true`, `setup.sh:107`).
+    *
+    * The batch is scanned and decoded once: both legs read one
+    * `BatchRelation.computeOnce` relation of `(raw, env)`. `df` must be a
+    * batch DataFrame, as `foreachBatch` hands over.
     */
   def unwrapTolerant(df: DataFrame, jsonCol: Column, payload: StructType,
                      microTsCols: Seq[String] = Seq.empty)
       : (DataFrame, DataFrame) = {
-    val decoded = df.filter(jsonCol.isNotNull)
-      .withColumn("_graft_raw", jsonCol.cast(StringType))
-      .withColumn("_graft_env", from_json(jsonCol, envelopeSchema(payload)))
-    val good0 = decoded.filter(col("_graft_env.payload").isNotNull)
-      .select(col("_graft_env.payload.*"))
-    val good = microTsCols.foldLeft(good0)((d, c) =>
-      d.withColumn(c, timestamp_micros(col(c))))
+    val goodColumns = payloadColumns(payload, microTsCols)
+    val decoded = BatchRelation.computeOnce(df.filter(jsonCol.isNotNull)
+      .select(jsonCol.cast(StringType).as("raw"),
+        from_json(jsonCol, decodeSchema(payload)).as("env")))
+    val good = decoded.filter(col("env.payload").isNotNull).select(goodColumns: _*)
     // from_json (PERMISSIVE) yields a null-fields row for malformed input,
     // so the reason tag discriminates via try_parse_json on the (small)
     // quarantine leg only: syntactically broken vs valid-JSON-wrong-shape.
-    val quarantine = decoded
-      .filter(col("_graft_env").isNull || col("_graft_env.payload").isNull)
-      .select(col("_graft_raw").as("raw"),
-        when(try_parse_json(col("_graft_raw")).isNull, lit("unparseable_json"))
-          .otherwise(lit("missing_payload")).as("error"))
+    val quarantine = BatchRelation.coalesceIfOnePartition(decoded
+      .filter(col("env").isNull || col("env.payload").isNull)
+      .select(col("raw"),
+        when(try_parse_json(col("raw")).isNull, lit("unparseable_json"))
+          .otherwise(lit("missing_payload")).as("error")))
+      .distinct()
     (good, quarantine)
   }
 }

@@ -119,6 +119,35 @@ class JdbcPipelineSpec extends SparkSpec {
     assert(dlq.toSeq == Seq(("{corrupt", "unparseable_json")))
   }
 
+  test("tolerant CDC apply: a bad message twice in one batch lands once in a raw-keyed DLQ") {
+    import spark.implicits._
+    // its own database, so the catalog-walk inventory below stays fixed
+    val dlqUrl = "jdbc:derby:memory:graftdlq;create=true"
+    val conn = DriverManager.getConnection(dlqUrl)
+    try {
+      conn.createStatement().execute("CREATE TABLE users (user_id INT PRIMARY KEY, " +
+        "username VARCHAR(255), account_type VARCHAR(50), " +
+        "updated_at TIMESTAMP, created_at TIMESTAMP)")
+      // the DLQ DDL derived from the quarantine schema: PRIMARY KEY (raw)
+      conn.createStatement().execute(AnsiDeleteInsertDialect.createTableDdlFromSpark(
+        "app", "users_dlq", org.apache.spark.sql.types.StructType.fromDDL("raw STRING, error STRING")))
+    } finally conn.close()
+    val good = """{"payload":{"user_id":1,"username":"user1","account_type":"Bronze",""" +
+      """"updated_at":1754155842030174,"created_at":1754155842030174}}"""
+    // a redelivered corrupt message and two empty strings in one micro-batch
+    // of one partition (one file), so one sink transaction sees each twice
+    val batch = Seq(good, "{corrupt", "", "{corrupt", "").toDF("value").coalesce(1)
+    JdbcUpsertSink.tolerantCdcBatch(dlqUrl, "users", Seq("user_id"), "users_dlq",
+      col("value"), graft.sources.CdcEnvelope.usersPayload,
+      Seq("updated_at", "created_at"))(batch, 0L)
+
+    val users = JdbcSnapshot.read(spark, dlqUrl, "users").collect().map(_.getInt(0)).toSeq
+    assert(users == Seq(1))
+    val dlq = JdbcSnapshot.read(spark, dlqUrl, "users_dlq")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(dlq == Set(("{corrupt", "unparseable_json"), ("", "unparseable_json")))
+  }
+
   test("dialect renderers: ClickHouse is the reference golden; ANSI is executable") {
     val refCols = Seq(
       "user_id" -> "integer", "username" -> "character varying",
