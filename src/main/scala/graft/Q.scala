@@ -12,9 +12,25 @@ final case class Q(
     oracle: Option[String] = None)
 
 object Q {
+  /** The `fn` of a [[Q.sql]] cell: registers the corpus tables `text`
+    * names, then runs it through `spark.sql`.
+    */
+  final case class Sql(text: String) extends ((SparkSession, String) => DataFrame) {
+    def apply(s: SparkSession, d: String): DataFrame = {
+      Tables.registerNamed(s, d, text)
+      s.sql(text)
+    }
+  }
+
   /** A query whose single SQL text is valid in BOTH Spark SQL and DuckDB:
     * runs via spark.sql over temp views, and verbatim as the oracle.
+    *
+    * The rule: a cell whose DataFrame plan equals its oracle's is written
+    * as `Q.sql`. When Catalyst optimizes the oracle text to a plan that
+    * `sameResult`s the hand-written DataFrame one, with the same join
+    * hints and output names and types, the DataFrame copy adds code and
+    * tests nothing.
+    * `OracleTwinSpec` fails on any cell that breaks the rule.
     */
-  def sql(name: String, text: String): Q =
-    Q(name, (s, d) => { Tables.registerAll(s, d); s.sql(text) }, Some(text))
+  def sql(name: String, text: String): Q = Q(name, Sql(text), Some(text))
 }

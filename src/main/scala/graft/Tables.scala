@@ -126,4 +126,13 @@ object Tables {
   /** Register every corpus table as a temp view, for spark.sql operators. */
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     all.foreach(n => read(spark, sfDir, n).createOrReplaceTempView(n))
+
+  /** Register as temp views only the corpus tables `sqlText` names, by a
+    * case-insensitive whole-word match: a query reads what it names and no
+    * other table. A false match (a column or alias spelled like a table)
+    * only registers one more view.
+    */
+  def registerNamed(spark: SparkSession, sfDir: String, sqlText: String): Unit =
+    all.filter(n => s"(?i)\\b$n\\b".r.findFirstIn(sqlText).isDefined)
+      .foreach(n => read(spark, sfDir, n).createOrReplaceTempView(n))
 }

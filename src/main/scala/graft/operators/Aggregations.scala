@@ -19,48 +19,26 @@ import graft.util.Checkpoints.Truncate
   */
 object Aggregations {
 
-  private val qtyDec = col("l_quantity").cast(DecimalType(18, 2))
-  private val priceDec = col("l_extendedprice").cast(DecimalType(18, 2))
-  private val totalDec = col("o_totalprice").cast(DecimalType(18, 2))
-
   /** Ungrouped COUNT/SUM (§2.0 rule-2 form). */
-  val aggGlobal: Q = Q(
+  val aggGlobal: Q = Q.sql(
     "agg_global",
-    (s, d) =>
-      Tables.read(s, d, "lineitem").agg(
-        count(lit(1)).as("n_rows"),
-        sum(qtyDec).cast(DoubleType).as("sum_qty")),
-    Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-                   CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-            FROM lineitem"""))
+    """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+              CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+       FROM lineitem""")
 
   /** TPC-H-Q1-shaped grouped aggregation on lineitem — the flagship query
     * (scan → project → partial agg → shuffle 6 groups → final agg → sort).
     */
-  val aggHashGroupby: Q = Q(
+  val aggHashGroupby: Q = Q.sql(
     "agg_hash_groupby",
-    (s, d) =>
-      Tables.read(s, d, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(qtyDec).cast(DoubleType).as("sum_qty"),
-          sum(priceDec).cast(DoubleType).as("sum_base"),
-          // decimal × decimal is exact (scale 4) — casting the double
-          // PRODUCT to decimal would instead hit engine-specific rounding
-          // of binary near-ties
-          sum(priceDec * (lit(1).cast(DecimalType(18, 2)) -
-            col("l_discount").cast(DecimalType(18, 2))))
-            .cast(DoubleType).as("sum_disc"),
-          count(lit(1)).as("cnt"))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus")),
-    Some("""SELECT l_returnflag, l_linestatus,
-                   CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base,
-                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                            * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc,
-                   CAST(COUNT(*) AS BIGINT) AS cnt
-            FROM lineitem GROUP BY l_returnflag, l_linestatus
-            ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""))
+    """SELECT l_returnflag, l_linestatus,
+              CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+              CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base,
+              CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
+                       * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc,
+              CAST(COUNT(*) AS BIGINT) AS cnt
+       FROM lineitem GROUP BY l_returnflag, l_linestatus
+       ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""")
 
   /** Ordered string aggregation (reference `setup.sh:62`):
     * `string_agg(x, ',' ORDER BY x)` ≡ concat_ws over a sorted collect_list.
@@ -79,19 +57,13 @@ object Aggregations {
             FROM nation JOIN region ON n_regionkey = r_regionkey
             GROUP BY r_name ORDER BY r_name NULLS FIRST"""))
 
-  val aggCountDistinct: Q = Q(
+  val aggCountDistinct: Q = Q.sql(
     "agg_count_distinct",
-    (s, d) =>
-      Tables.read(s, d, "orders")
-        .groupBy(col("o_orderstatus"))
-        .agg(countDistinct(col("o_custkey")).as("n_cust"),
-          count(lit(1)).as("n"))
-        .orderBy(asc_nulls_first("o_orderstatus")),
-    Some("""SELECT o_orderstatus,
-                   CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_cust,
-                   CAST(COUNT(*) AS BIGINT) AS n
-            FROM orders GROUP BY o_orderstatus
-            ORDER BY o_orderstatus NULLS FIRST"""))
+    """SELECT o_orderstatus,
+              CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_cust,
+              CAST(COUNT(*) AS BIGINT) AS n
+       FROM orders GROUP BY o_orderstatus
+       ORDER BY o_orderstatus NULLS FIRST""")
 
   /** HLL approximate distinct — no oracle (property-tested within 5% of
     * exact). The scale answer to count-distinct: no per-key shuffle of raw
@@ -245,23 +217,14 @@ object Aggregations {
             FROM e GROUP BY ROLLUP (event_type, grp)
             ORDER BY event_type NULLS FIRST, grp NULLS FIRST, g_type, g_grp"""))
 
-  val aggMinMaxAvg: Q = Q(
+  val aggMinMaxAvg: Q = Q.sql(
     "agg_min_max_avg",
-    (s, d) =>
-      Tables.read(s, d, "orders")
-        .groupBy(col("o_orderpriority"))
-        .agg(
-          min(col("o_totalprice")).as("min_p"),
-          max(col("o_totalprice")).as("max_p"),
-          (sum(totalDec).cast(DoubleType) / count(lit(1))).as("avg_p"),
-          count(lit(1)).as("n"))
-        .orderBy(asc_nulls_first("o_orderpriority")),
-    Some("""SELECT o_orderpriority,
-                   MIN(o_totalprice) AS min_p, MAX(o_totalprice) AS max_p,
-                   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_p,
-                   CAST(COUNT(*) AS BIGINT) AS n
-            FROM orders GROUP BY o_orderpriority
-            ORDER BY o_orderpriority NULLS FIRST"""))
+    """SELECT o_orderpriority,
+              MIN(o_totalprice) AS min_p, MAX(o_totalprice) AS max_p,
+              CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_p,
+              CAST(COUNT(*) AS BIGINT) AS n
+       FROM orders GROUP BY o_orderpriority
+       ORDER BY o_orderpriority NULLS FIRST""")
 
   /** Exact interpolated percentile (gate rule 7 — registered only if the
     * interpolation hash-matches DuckDB's quantile_cont on real data).
@@ -293,55 +256,32 @@ object Aggregations {
        ORDER BY g1 NULLS FIRST, g2 NULLS FIRST,
                 o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""")
 
-  val aggRollup: Q = Q(
+  val aggRollup: Q = Q.sql(
     "agg_rollup",
-    (s, d) =>
-      Tables.read(s, d, "orders")
-        .rollup(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(grouping(col("o_orderstatus")).cast(IntegerType).as("g1"),
-          grouping(col("o_orderpriority")).cast(IntegerType).as("g2"),
-          count(lit(1)).as("cnt"),
-          sum(totalDec).cast(DoubleType).as("total"))
-        .orderBy(asc_nulls_first("g1"), asc_nulls_first("g2"),
-          asc_nulls_first("o_orderstatus"), asc_nulls_first("o_orderpriority")),
-    Some("""SELECT o_orderstatus, o_orderpriority,
-                   CAST(grouping(o_orderstatus) AS INT) AS g1,
-                   CAST(grouping(o_orderpriority) AS INT) AS g2,
-                   CAST(COUNT(*) AS BIGINT) AS cnt,
-                   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-            FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-            ORDER BY g1 NULLS FIRST, g2 NULLS FIRST,
-                     o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"""))
+    """SELECT o_orderstatus, o_orderpriority,
+              CAST(grouping(o_orderstatus) AS INT) AS g1,
+              CAST(grouping(o_orderpriority) AS INT) AS g2,
+              CAST(COUNT(*) AS BIGINT) AS cnt,
+              CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+       FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
+       ORDER BY g1 NULLS FIRST, g2 NULLS FIRST,
+                o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""")
 
-  val aggCube: Q = Q(
+  val aggCube: Q = Q.sql(
     "agg_cube",
-    (s, d) =>
-      Tables.read(s, d, "orders")
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(grouping(col("o_orderstatus")).cast(IntegerType).as("g1"),
-          grouping(col("o_orderpriority")).cast(IntegerType).as("g2"),
-          count(lit(1)).as("cnt"),
-          sum(totalDec).cast(DoubleType).as("total"))
-        .orderBy(asc_nulls_first("g1"), asc_nulls_first("g2"),
-          asc_nulls_first("o_orderstatus"), asc_nulls_first("o_orderpriority")),
-    Some("""SELECT o_orderstatus, o_orderpriority,
-                   CAST(grouping(o_orderstatus) AS INT) AS g1,
-                   CAST(grouping(o_orderpriority) AS INT) AS g2,
-                   CAST(COUNT(*) AS BIGINT) AS cnt,
-                   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-            FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-            ORDER BY g1 NULLS FIRST, g2 NULLS FIRST,
-                     o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"""))
+    """SELECT o_orderstatus, o_orderpriority,
+              CAST(grouping(o_orderstatus) AS INT) AS g1,
+              CAST(grouping(o_orderpriority) AS INT) AS g2,
+              CAST(COUNT(*) AS BIGINT) AS cnt,
+              CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+       FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
+       ORDER BY g1 NULLS FIRST, g2 NULLS FIRST,
+                o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""")
 
-  val aggDistinctRows: Q = Q(
+  val aggDistinctRows: Q = Q.sql(
     "agg_distinct_rows",
-    (s, d) =>
-      Tables.read(s, d, "customer")
-        .select(col("c_mktsegment"), col("c_nationkey"))
-        .distinct()
-        .orderBy(asc_nulls_first("c_mktsegment"), asc_nulls_first("c_nationkey")),
-    Some("""SELECT DISTINCT c_mktsegment, c_nationkey FROM customer
-            ORDER BY c_mktsegment NULLS FIRST, c_nationkey NULLS FIRST"""))
+    """SELECT DISTINCT c_mktsegment, c_nationkey FROM customer
+       ORDER BY c_mktsegment NULLS FIRST, c_nationkey NULLS FIRST""")
 
   /** Pivot event_type → per-user count columns. The pivot value list is
     * pinned (never inferred) — at scale inference would be an extra pass.
@@ -420,28 +360,16 @@ object Aggregations {
     * the lexicographically smallest value — two hash aggs + a per-group
     * rank over |distinct values| rows (never the raw rows).
     */
-  val aggMode: Q = Q(
+  val aggMode: Q = Q.sql(
     "agg_mode",
-    (s, d) => {
-      val counts = Tables.read(s, d, "events")
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id"))
-        .orderBy(desc("n"), asc_nulls_first("event_type"))
-      counts.withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("user_id"), col("event_type").as("mode_type"), col("n"))
-        .orderBy(asc_nulls_first("user_id"))
-    },
-    Some("""WITH c AS (SELECT user_id, event_type, count(*) AS n
-                       FROM events GROUP BY 1, 2),
-            r AS (SELECT user_id, event_type, n,
-                         row_number() OVER (PARTITION BY user_id
-                           ORDER BY n DESC, event_type NULLS FIRST) AS rk
-                  FROM c)
-            SELECT user_id, event_type AS mode_type, n FROM r WHERE rk = 1
-            ORDER BY user_id NULLS FIRST"""))
+    """WITH c AS (SELECT user_id, event_type, count(*) AS n
+                  FROM events GROUP BY 1, 2),
+       r AS (SELECT user_id, event_type, n,
+                    row_number() OVER (PARTITION BY user_id
+                      ORDER BY n DESC, event_type NULLS FIRST) AS rk
+             FROM c)
+       SELECT user_id, event_type AS mode_type, n FROM r WHERE rk = 1
+       ORDER BY user_id NULLS FIRST""")
 
   /** Quantile SKETCH per group (`approx_percentile`, mergeable partial
     * state — the companion to `agg_approx_distinct`'s HLL): at 100 TB the
@@ -470,23 +398,15 @@ object Aggregations {
   /** Boolean-logic aggregates per group: `count_if`, `bool_and`,
     * `bool_or`, `every`-style predicates — all exact, one hash agg.
     */
-  val aggBoolLogic: Q = Q(
+  val aggBoolLogic: Q = Q.sql(
     "agg_bool_logic",
-    (s, d) =>
-      Tables.read(s, d, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(expr("count_if(l_quantity > 25)").as("n_bulk"),
-          expr("bool_and(l_quantity <= 50)").as("all_in_range"),
-          expr("bool_or(l_discount > 0.09)").as("any_deep_discount"),
-          count(lit(1)).as("n"))
-        .orderBy(asc_nulls_first("l_returnflag")),
-    Some("""SELECT l_returnflag,
-                   CAST(count_if(l_quantity > 25) AS BIGINT) AS n_bulk,
-                   bool_and(l_quantity <= 50) AS all_in_range,
-                   bool_or(l_discount > 0.09) AS any_deep_discount,
-                   count(*) AS n
-            FROM lineitem GROUP BY l_returnflag
-            ORDER BY l_returnflag NULLS FIRST"""))
+    """SELECT l_returnflag,
+              CAST(count_if(l_quantity > 25) AS BIGINT) AS n_bulk,
+              bool_and(l_quantity <= 50) AS all_in_range,
+              bool_or(l_discount > 0.09) AS any_deep_discount,
+              count(*) AS n
+       FROM lineitem GROUP BY l_returnflag
+       ORDER BY l_returnflag NULLS FIRST""")
 
   /** Heavy hitters (tokens with frequency > 2% of the stream) via a
     * two-pass Misra–Gries prescreen — the bounded-memory alternative to
@@ -833,41 +753,22 @@ object Aggregations {
     * (exact, merge-order independent) and the `cum·2 ≥ tot` pick is pure
     * integer/decimal comparison — no float in the decision path.
     */
-  val aggWeightedMedian: Q = Q(
+  val aggWeightedMedian: Q = Q.sql(
     "agg_weighted_median",
-    (s, d) => {
-      // NULL quantities are excluded (mirrored in the oracle): a median
-      // over values is undefined for NULL, and leaving them in would put
-      // the NULL cell at the running sum's HEAD in Spark (ASC NULLS
-      // FIRST) but TAIL in DuckDB (NULLS LAST), shifting every cum
-      val g = Tables.read(s, d, "lineitem")
-        .filter(col("l_quantity").isNotNull)
-        .groupBy(col("l_returnflag"), col("l_quantity"))
-        .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2))).as("w"))
-      val byFlag = Window.partitionBy(col("l_returnflag"))
-      val cumW = byFlag.orderBy(col("l_quantity"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      g.withColumn("cum", sum(col("w")).over(cumW))
-        .withColumn("tot", sum(col("w")).over(byFlag))
-        .filter(col("cum") * 2 >= col("tot"))
-        .groupBy(col("l_returnflag"))
-        .agg(min(col("l_quantity")).as("weighted_median"))
-        .orderBy(asc_nulls_first("l_returnflag"))
-    },
-    Some("""WITH g AS (SELECT l_returnflag, l_quantity,
-                              sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS w
-                       FROM lineitem WHERE l_quantity IS NOT NULL
-                       GROUP BY 1, 2),
-            c AS (SELECT *,
-                         sum(w) OVER (PARTITION BY l_returnflag
-                           ORDER BY l_quantity
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           AS cum,
-                         sum(w) OVER (PARTITION BY l_returnflag) AS tot
-                  FROM g)
-            SELECT l_returnflag, min(l_quantity) AS weighted_median
-            FROM c WHERE cum * 2 >= tot
-            GROUP BY 1 ORDER BY l_returnflag NULLS FIRST"""))
+    """WITH g AS (SELECT l_returnflag, l_quantity,
+                         sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS w
+                  FROM lineitem WHERE l_quantity IS NOT NULL
+                  GROUP BY 1, 2),
+       c AS (SELECT *,
+                    sum(w) OVER (PARTITION BY l_returnflag
+                      ORDER BY l_quantity
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                      AS cum,
+                    sum(w) OVER (PARTITION BY l_returnflag) AS tot
+             FROM g)
+       SELECT l_returnflag, min(l_quantity) AS weighted_median
+       FROM c WHERE cum * 2 >= tot
+       GROUP BY 1 ORDER BY l_returnflag NULLS FIRST""")
 
   /** Algebraic re-aggregation of persisted partials — THE 100 TB
     * materialized-view pattern: per-(type, day) partials (sum, count)

@@ -20,77 +20,46 @@ object Expressions {
     * string building `setup.sh:60-64`). Per-row double arithmetic is
     * IEEE-identical cross-engine (§2.0 rule 3).
     */
-  val opProjectCompute: Q = Q(
+  val opProjectCompute: Q = Q.sql(
     "op_project_compute",
-    (s, d) =>
-      Tables.read(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("net_price"))
-        // (l_orderkey, l_linenumber) is not unique in this corpus — every
-        // output column joins the sort so the order is total
-        .orderBy(asc_nulls_first("l_orderkey"), asc_nulls_first("l_linenumber"),
-          asc_nulls_first("net_price")),
-    Some("""SELECT l_orderkey, l_linenumber,
-                   l_extendedprice * (1.0 - l_discount) AS net_price
-            FROM lineitem
-            ORDER BY l_orderkey NULLS FIRST, l_linenumber NULLS FIRST,
-                     net_price NULLS FIRST"""))
+    """SELECT l_orderkey, l_linenumber,
+              l_extendedprice * (1.0 - l_discount) AS net_price
+       FROM lineitem
+       ORDER BY l_orderkey NULLS FIRST, l_linenumber NULLS FIRST,
+                net_price NULLS FIRST""")
 
   /** WHERE with =, AND, > (reference `setup.sh:51,57,193,197`). The filter
     * reaches the parquet scan as PushedFilters.
     */
-  val opFilterPred: Q = Q(
+  val opFilterPred: Q = Q.sql(
     "op_filter_pred",
-    (s, d) =>
-      Tables.read(s, d, "orders")
-        .filter(col("o_orderstatus") === "F" && col("o_totalprice") > 100000.0)
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-        .orderBy(asc_nulls_first("o_orderkey")),
-    Some("""SELECT o_orderkey, o_orderstatus, o_totalprice
-            FROM orders
-            WHERE o_orderstatus = 'F' AND o_totalprice > 100000.0
-            ORDER BY o_orderkey NULLS FIRST"""))
+    """SELECT o_orderkey, o_orderstatus, o_totalprice
+       FROM orders
+       WHERE o_orderstatus = 'F' AND o_totalprice > 100000.0
+       ORDER BY o_orderkey NULLS FIRST""")
 
   /** CASE WHEN (the reference's own type map is one, `setup.sh:40-49`). */
-  val opCaseWhen: Q = Q(
+  val opCaseWhen: Q = Q.sql(
     "op_case_when",
-    (s, d) =>
-      Tables.read(s, d, "customer")
-        .select(col("c_custkey"), col("c_acctbal"),
-          when(col("c_acctbal") < 0, lit("negative"))
-            .when(col("c_acctbal") < 5000, lit("standard"))
-            .otherwise(lit("premium")).as("band"))
-        .orderBy(asc_nulls_first("c_custkey")),
-    Some("""SELECT c_custkey, c_acctbal,
-                   CASE WHEN c_acctbal < 0 THEN 'negative'
-                        WHEN c_acctbal < 5000 THEN 'standard'
-                        ELSE 'premium' END AS band
-            FROM customer ORDER BY c_custkey NULLS FIRST"""))
+    """SELECT c_custkey, c_acctbal,
+              CASE WHEN c_acctbal < 0 THEN 'negative'
+                   WHEN c_acctbal < 5000 THEN 'standard'
+                   ELSE 'premium' END AS band
+       FROM customer ORDER BY c_custkey NULLS FIRST""")
 
   /** String concatenation `||` (reference `setup.sh:61-64`). */
-  val opStringConcat: Q = Q(
+  val opStringConcat: Q = Q.sql(
     "op_string_concat",
-    (s, d) =>
-      Tables.read(s, d, "customer")
-        .select(col("c_custkey"),
-          concat(col("c_name"), lit("/"), col("c_mktsegment")).as("tag"))
-        .orderBy(asc_nulls_first("c_custkey")),
-    Some("""SELECT c_custkey, c_name || '/' || c_mktsegment AS tag
-            FROM customer ORDER BY c_custkey NULLS FIRST"""))
+    """SELECT c_custkey, c_name || '/' || c_mktsegment AS tag
+       FROM customer ORDER BY c_custkey NULLS FIRST""")
 
   /** COALESCE / NULLIF (reference `setup.sh:64`). */
-  val opCoalesceNullif: Q = Q(
+  val opCoalesceNullif: Q = Q.sql(
     "op_coalesce_nullif",
-    (s, d) =>
-      Tables.read(s, d, "orders")
-        .select(col("o_orderkey"),
-          nullif(col("o_orderstatus"), lit("O")).as("closed_status"),
-          coalesce(nullif(col("o_orderstatus"), lit("O")), lit("OPEN")).as("status_or_open"))
-        .orderBy(asc_nulls_first("o_orderkey")),
-    Some("""SELECT o_orderkey,
-                   NULLIF(o_orderstatus, 'O') AS closed_status,
-                   COALESCE(NULLIF(o_orderstatus, 'O'), 'OPEN') AS status_or_open
-            FROM orders ORDER BY o_orderkey NULLS FIRST"""))
+    """SELECT o_orderkey,
+              NULLIF(o_orderstatus, 'O') AS closed_status,
+              COALESCE(NULLIF(o_orderstatus, 'O'), 'OPEN') AS status_or_open
+       FROM orders ORDER BY o_orderkey NULLS FIRST""")
 
   /** Explicit casts across the §1.2 lattice. (No double→int casts: Spark
     * truncates, DuckDB rounds — intentionally excluded.)
@@ -190,21 +159,13 @@ object Expressions {
             ORDER BY s.day"""))
 
   /** IF / NULLIF / GREATEST / LEAST. */
-  val fnConditional: Q = Q(
+  val fnConditional: Q = Q.sql(
     "fn_conditional",
-    (s, d) =>
-      Tables.read(s, d, "part")
-        .select(col("p_partkey"),
-          greatest(col("p_size"), lit(25)).as("g"),
-          least(col("p_size"), lit(25)).as("l"),
-          when(col("p_size") > 25, lit("big")).otherwise(lit("small")).as("tag"),
-          nullif(col("p_size"), lit(25)).as("sz_null"))
-        .orderBy(asc_nulls_first("p_partkey")),
-    Some("""SELECT p_partkey,
-                   GREATEST(p_size, 25) AS g, LEAST(p_size, 25) AS l,
-                   CASE WHEN p_size > 25 THEN 'big' ELSE 'small' END AS tag,
-                   NULLIF(p_size, 25) AS sz_null
-            FROM part ORDER BY p_partkey NULLS FIRST"""))
+    """SELECT p_partkey,
+              GREATEST(p_size, 25) AS g, LEAST(p_size, 25) AS l,
+              CASE WHEN p_size > 25 THEN 'big' ELSE 'small' END AS tag,
+              NULLIF(p_size, 25) AS sz_null
+       FROM part ORDER BY p_partkey NULLS FIRST""")
 
   /** String function battery (string handling throughout `setup.sh`).
     * Int-returning functions cast to BIGINT in both dialects (Spark length →
@@ -257,51 +218,31 @@ object Expressions {
     * BIGINT; Spark date_trunc returns TIMESTAMP while DuckDB returns DATE,
     * so both sides normalize through CAST(.. AS DATE).
     */
-  val fnDatetime: Q = Q(
+  val fnDatetime: Q = Q.sql(
     "fn_datetime",
-    (s, d) =>
-      Tables.read(s, d, "orders")
-        .select(col("o_orderkey"),
-          year(col("o_orderdate")).cast(LongType).as("y"),
-          month(col("o_orderdate")).cast(LongType).as("m"),
-          dayofmonth(col("o_orderdate")).cast(LongType).as("dom"),
-          date_trunc("month", col("o_orderdate")).cast(DateType).as("mon_start"),
-          date_add(col("o_orderdate").cast(DateType), 7).as("week_later"))
-        .orderBy(asc_nulls_first("o_orderkey")),
-    Some("""SELECT o_orderkey,
-                   CAST(year(o_orderdate) AS BIGINT) AS y,
-                   CAST(month(o_orderdate) AS BIGINT) AS m,
-                   CAST(day(o_orderdate) AS BIGINT) AS dom,
-                   CAST(date_trunc('month', o_orderdate) AS DATE) AS mon_start,
-                   CAST(o_orderdate AS DATE) + 7 AS week_later
-            FROM orders ORDER BY o_orderkey NULLS FIRST"""))
+    """SELECT o_orderkey,
+              CAST(year(o_orderdate) AS BIGINT) AS y,
+              CAST(month(o_orderdate) AS BIGINT) AS m,
+              CAST(day(o_orderdate) AS BIGINT) AS dom,
+              CAST(date_trunc('month', o_orderdate) AS DATE) AS mon_start,
+              CAST(o_orderdate AS DATE) + 7 AS week_later
+       FROM orders ORDER BY o_orderkey NULLS FIRST""")
 
   /** Math battery (exact cross-engine subset; floor/ceil cast to BIGINT —
     * DuckDB's return DOUBLE).
     */
-  val fnMath: Q = Q(
+  val fnMath: Q = Q.sql(
     "fn_math",
-    (s, d) =>
-      Tables.read(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          round(col("l_extendedprice"), 1).as("r1"),
-          floor(col("l_extendedprice")).cast(LongType).as("fl"),
-          ceil(col("l_extendedprice")).cast(LongType).as("ce"),
-          abs(col("l_discount") - 0.05).as("ad"),
-          (col("l_orderkey") % 7).as("m7"))
-        .orderBy(asc_nulls_first("l_orderkey"), asc_nulls_first("l_linenumber"),
-          asc_nulls_first("r1"), asc_nulls_first("fl"), asc_nulls_first("ce"),
-          asc_nulls_first("ad")),
-    Some("""SELECT l_orderkey, l_linenumber,
-                   ROUND(l_extendedprice, 1) AS r1,
-                   CAST(FLOOR(l_extendedprice) AS BIGINT) AS fl,
-                   CAST(CEIL(l_extendedprice) AS BIGINT) AS ce,
-                   ABS(l_discount - 0.05) AS ad,
-                   l_orderkey % 7 AS m7
-            FROM lineitem
-            ORDER BY l_orderkey NULLS FIRST, l_linenumber NULLS FIRST,
-                     r1 NULLS FIRST, fl NULLS FIRST, ce NULLS FIRST,
-                     ad NULLS FIRST"""))
+    """SELECT l_orderkey, l_linenumber,
+              ROUND(l_extendedprice, 1) AS r1,
+              CAST(FLOOR(l_extendedprice) AS BIGINT) AS fl,
+              CAST(CEIL(l_extendedprice) AS BIGINT) AS ce,
+              ABS(l_discount - 0.05) AS ad,
+              l_orderkey % 7 AS m7
+       FROM lineitem
+       ORDER BY l_orderkey NULLS FIRST, l_linenumber NULLS FIRST,
+                r1 NULLS FIRST, fl NULLS FIRST, ce NULLS FIRST,
+                ad NULLS FIRST""")
 
   /** Nested JSON paths (the CDC envelope is nested JSON, `README.md:127`):
     * wrap the flat `props` into an outer object and extract through two

@@ -19,22 +19,11 @@ import graft.{Q, Tables}
   */
 object Joins {
 
-  private def ordersCustomer(s: org.apache.spark.sql.SparkSession, d: String,
-                             joinType: String): DataFrame = {
-    val o = Tables.read(s, d, "orders")
-    val c = Tables.read(s, d, "customer")
-    o.join(c, o("o_custkey") === c("c_custkey"), joinType)
-  }
-
-  val joinInnerHash: Q = Q(
+  val joinInnerHash: Q = Q.sql(
     "join_inner_hash",
-    (s, d) =>
-      ordersCustomer(s, d, "inner")
-        .select(col("o_orderkey"), col("c_custkey"), col("c_name"), col("o_totalprice"))
-        .orderBy(asc_nulls_first("o_orderkey")),
-    Some("""SELECT o_orderkey, c_custkey, c_name, o_totalprice
-            FROM orders JOIN customer ON o_custkey = c_custkey
-            ORDER BY o_orderkey NULLS FIRST"""))
+    """SELECT o_orderkey, c_custkey, c_name, o_totalprice
+       FROM orders JOIN customer ON o_custkey = c_custkey
+       ORDER BY o_orderkey NULLS FIRST""")
 
   /** Broadcast equi join — same result as a shuffled join, physically a
     * BroadcastHashJoin (the correct plan for a 25-row dimension at any
@@ -53,49 +42,26 @@ object Joins {
             FROM nation JOIN region ON n_regionkey = r_regionkey
             ORDER BY n_nationkey NULLS FIRST"""))
 
-  val joinLeftOuter: Q = Q(
+  val joinLeftOuter: Q = Q.sql(
     "join_left_outer",
-    (s, d) => {
-      val c = Tables.read(s, d, "customer")
-      val o = Tables.read(s, d, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left")
-        .select(col("c_custkey"), col("c_name"), col("o_orderkey"), col("o_totalprice"))
-        .orderBy(asc_nulls_first("c_custkey"), asc_nulls_first("o_orderkey"))
-    },
-    Some("""SELECT c_custkey, c_name, o_orderkey, o_totalprice
-            FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-            ORDER BY c_custkey NULLS FIRST, o_orderkey NULLS FIRST"""))
+    """SELECT c_custkey, c_name, o_orderkey, o_totalprice
+       FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+       ORDER BY c_custkey NULLS FIRST, o_orderkey NULLS FIRST""")
 
-  val joinRightOuter: Q = Q(
+  val joinRightOuter: Q = Q.sql(
     "join_right_outer",
-    (s, d) => {
-      val o = Tables.read(s, d, "orders")
-      val c = Tables.read(s, d, "customer")
-      o.join(c, o("o_custkey") === c("c_custkey"), "right")
-        .select(col("c_custkey"), col("c_name"), col("o_orderkey"), col("o_totalprice"))
-        .orderBy(asc_nulls_first("c_custkey"), asc_nulls_first("o_orderkey"))
-    },
-    Some("""SELECT c_custkey, c_name, o_orderkey, o_totalprice
-            FROM orders RIGHT JOIN customer ON o_custkey = c_custkey
-            ORDER BY c_custkey NULLS FIRST, o_orderkey NULLS FIRST"""))
+    """SELECT c_custkey, c_name, o_orderkey, o_totalprice
+       FROM orders RIGHT JOIN customer ON o_custkey = c_custkey
+       ORDER BY c_custkey NULLS FIRST, o_orderkey NULLS FIRST""")
 
   /** Full outer over deliberately part-disjoint key subsets of nation. */
-  val joinFullOuter: Q = Q(
+  val joinFullOuter: Q = Q.sql(
     "join_full_outer",
-    (s, d) => {
-      val n = Tables.read(s, d, "nation")
-      val n1 = n.filter(col("n_nationkey") < 15)
-        .select(col("n_nationkey").as("k1"), col("n_name").as("name1"))
-      val n2 = n.filter(col("n_nationkey") >= 10)
-        .select(col("n_nationkey").as("k2"), col("n_name").as("name2"))
-      n1.join(n2, n1("k1") === n2("k2"), "full")
-        .orderBy(asc_nulls_first("k1"), asc_nulls_first("k2"))
-    },
-    Some("""SELECT n1.k1, n1.name1, n2.k2, n2.name2
-            FROM (SELECT n_nationkey AS k1, n_name AS name1 FROM nation WHERE n_nationkey < 15) n1
-            FULL JOIN (SELECT n_nationkey AS k2, n_name AS name2 FROM nation WHERE n_nationkey >= 10) n2
-              ON n1.k1 = n2.k2
-            ORDER BY k1 NULLS FIRST, k2 NULLS FIRST"""))
+    """SELECT n1.k1, n1.name1, n2.k2, n2.name2
+       FROM (SELECT n_nationkey AS k1, n_name AS name1 FROM nation WHERE n_nationkey < 15) n1
+       FULL JOIN (SELECT n_nationkey AS k2, n_name AS name2 FROM nation WHERE n_nationkey >= 10) n2
+         ON n1.k1 = n2.k2
+       ORDER BY k1 NULLS FIRST, k2 NULLS FIRST""")
 
   val joinLeftSemi: Q = Q(
     "join_left_semi",
@@ -123,18 +89,12 @@ object Joins {
             WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
             ORDER BY c_custkey NULLS FIRST"""))
 
-  val joinCross: Q = Q(
+  val joinCross: Q = Q.sql(
     "join_cross",
-    (s, d) => {
-      val r = Tables.read(s, d, "region")
-      val a = r.select(col("r_regionkey").as("ka"), col("r_name").as("name_a"))
-      val b = r.select(col("r_regionkey").as("kb"), col("r_name").as("name_b"))
-      a.crossJoin(b).orderBy(asc_nulls_first("ka"), asc_nulls_first("kb"))
-    },
-    Some("""SELECT a.r_regionkey AS ka, a.r_name AS name_a,
-                   b.r_regionkey AS kb, b.r_name AS name_b
-            FROM region a CROSS JOIN region b
-            ORDER BY ka NULLS FIRST, kb NULLS FIRST"""))
+    """SELECT a.r_regionkey AS ka, a.r_name AS name_a,
+              b.r_regionkey AS kb, b.r_name AS name_b
+       FROM region a CROSS JOIN region b
+       ORDER BY ka NULLS FIRST, kb NULLS FIRST""")
 
   /** Non-equi theta join (BroadcastNestedLoop — acceptable only because both
     * sides are tiny dimensions; never do this on a fact table).

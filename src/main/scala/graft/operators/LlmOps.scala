@@ -110,16 +110,10 @@ object LlmOps {
     * (hash groupBy on the full text — at 100 TB group on a text digest
     * instead, same plan shape).
     */
-  val llmDedupExactText: Q = Q(
+  val llmDedupExactText: Q = Q.sql(
     "llm_dedup_exact_text",
-    (s, d) =>
-      Tables.read(s, d, "documents")
-        .groupBy(col("text"))
-        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-        .select(col("keep_id"), col("n_copies"), col("text"))
-        .orderBy(asc_nulls_first("keep_id")),
-    Some("""SELECT MIN(doc_id) AS keep_id, CAST(COUNT(*) AS BIGINT) AS n_copies, text
-            FROM documents GROUP BY text ORDER BY keep_id NULLS FIRST"""))
+    """SELECT MIN(doc_id) AS keep_id, CAST(COUNT(*) AS BIGINT) AS n_copies, text
+       FROM documents GROUP BY text ORDER BY keep_id NULLS FIRST""")
 
   /** Exact dedup via content digest — the 100 TB form of
     * `llm_dedup_exact_text`: group on md5(text) so the shuffle carries a
@@ -3458,25 +3452,16 @@ object LlmOps {
     * before the exact-quota rank, or salt the stratum for the partial
     * top-N (the Windows.agg_topk_per_group discussion applies verbatim).
     */
-  val llmStratifiedSample: Q = Q(
+  val llmStratifiedSample: Q = Q.sql(
     "llm_stratified_sample",
-    (s, d) =>
-      Tables.read(s, d, "documents")
-        .withColumn("scramble", expr(scrambleSql))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("lang")).orderBy(col("scramble"), col("doc_id"))))
-        .filter(col("rk") <= 40)
-        .select(col("doc_id"), col("lang"), col("source"),
-          col("rk").cast(LongType).as("rk"))
-        .orderBy(asc_nulls_first("lang"), asc("rk")),
-    Some(s"""WITH r AS (
-               SELECT doc_id, lang, source,
-                      row_number() OVER (PARTITION BY lang
-                                         ORDER BY $scrambleSql, doc_id) AS rk
-               FROM documents)
-             SELECT doc_id, lang, source, CAST(rk AS BIGINT) AS rk
-             FROM r WHERE rk <= 40
-             ORDER BY lang NULLS FIRST, rk"""))
+    s"""WITH r AS (
+          SELECT doc_id, lang, source,
+                 row_number() OVER (PARTITION BY lang
+                                    ORDER BY $scrambleSql, doc_id) AS rk
+          FROM documents)
+        SELECT doc_id, lang, source, CAST(rk AS BIGINT) AS rk
+        FROM r WHERE rk <= 40
+        ORDER BY lang NULLS FIRST, rk""")
 
   /** Deterministic train/val/test split assignment (90/5/5 by scramble
     * bucket) — one scan, zero shuffles, reproducible across runs and

@@ -16,135 +16,78 @@ object SetOps {
   /** Multi-key ORDER BY asc/desc with explicit null placement
     * (reference `setup.sh:52,180`).
     */
-  val opSortMulti: Q = Q(
+  val opSortMulti: Q = Q.sql(
     "op_sort_multi",
-    (s, d) =>
-      Tables.read(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"), col("l_shipdate"))
-        .orderBy(asc_nulls_first("l_returnflag"), desc_nulls_first("l_shipdate"),
-          asc_nulls_first("l_orderkey"), asc_nulls_first("l_linenumber")),
-    Some("""SELECT l_orderkey, l_linenumber, l_returnflag, l_shipdate
-            FROM lineitem
-            ORDER BY l_returnflag ASC NULLS FIRST, l_shipdate DESC NULLS FIRST,
-                     l_orderkey ASC NULLS FIRST, l_linenumber ASC NULLS FIRST"""))
+    """SELECT l_orderkey, l_linenumber, l_returnflag, l_shipdate
+       FROM lineitem
+       ORDER BY l_returnflag ASC NULLS FIRST, l_shipdate DESC NULLS FIRST,
+                l_orderkey ASC NULLS FIRST, l_linenumber ASC NULLS FIRST""")
 
   /** LIMIT k after a total sort (reference `setup.sh:58`). */
-  val opLimitSorted: Q = Q(
+  val opLimitSorted: Q = Q.sql(
     "op_limit_sorted",
-    (s, d) =>
-      Tables.read(s, d, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(desc_nulls_first("o_totalprice"), asc_nulls_first("o_orderkey"))
-        .limit(10),
-    Some("""SELECT o_orderkey, o_totalprice FROM orders
-            ORDER BY o_totalprice DESC NULLS FIRST, o_orderkey ASC NULLS FIRST
-            LIMIT 10"""))
+    """SELECT o_orderkey, o_totalprice FROM orders
+       ORDER BY o_totalprice DESC NULLS FIRST, o_orderkey ASC NULLS FIRST
+       LIMIT 10""")
 
   /** Global top-k → TakeOrderedAndProject. */
-  val opTopkGlobal: Q = Q(
+  val opTopkGlobal: Q = Q.sql(
     "op_topk_global",
-    (s, d) =>
-      Tables.read(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
-        .orderBy(desc_nulls_first("l_extendedprice"),
-          asc_nulls_first("l_orderkey"), asc_nulls_first("l_linenumber"))
-        .limit(100),
-    Some("""SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
-            ORDER BY l_extendedprice DESC NULLS FIRST,
-                     l_orderkey ASC NULLS FIRST, l_linenumber ASC NULLS FIRST
-            LIMIT 100"""))
-
-  private def segA(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.read(s, d, "customer")
-      .filter(col("c_mktsegment") === "BUILDING")
-      .select(col("c_custkey"), col("c_mktsegment"))
-
-  private def segB(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.read(s, d, "customer")
-      .filter(col("c_acctbal") > 5000.0)
-      .select(col("c_custkey"), col("c_mktsegment"))
+    """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
+       ORDER BY l_extendedprice DESC NULLS FIRST,
+                l_orderkey ASC NULLS FIRST, l_linenumber ASC NULLS FIRST
+       LIMIT 100""")
 
   /** UNION ALL — the snapshot ∪ stream merge of the CDC pipeline
     * (reference `setup.sh:92` semantics).
     */
-  val setopUnionAll: Q = Q(
+  val setopUnionAll: Q = Q.sql(
     "setop_union_all",
-    (s, d) =>
-      segA(s, d).unionAll(segB(s, d))
-        .orderBy(asc_nulls_first("c_custkey"), asc_nulls_first("c_mktsegment")),
-    Some("""SELECT c_custkey, c_mktsegment FROM customer WHERE c_mktsegment = 'BUILDING'
-            UNION ALL
-            SELECT c_custkey, c_mktsegment FROM customer WHERE c_acctbal > 5000.0
-            ORDER BY c_custkey NULLS FIRST, c_mktsegment NULLS FIRST"""))
+    """SELECT c_custkey, c_mktsegment FROM customer WHERE c_mktsegment = 'BUILDING'
+       UNION ALL
+       SELECT c_custkey, c_mktsegment FROM customer WHERE c_acctbal > 5000.0
+       ORDER BY c_custkey NULLS FIRST, c_mktsegment NULLS FIRST""")
 
-  val setopUnionDistinct: Q = Q(
+  val setopUnionDistinct: Q = Q.sql(
     "setop_union_distinct",
-    (s, d) =>
-      segA(s, d).union(segB(s, d)).distinct()
-        .orderBy(asc_nulls_first("c_custkey"), asc_nulls_first("c_mktsegment")),
-    Some("""SELECT c_custkey, c_mktsegment FROM customer WHERE c_mktsegment = 'BUILDING'
-            UNION
-            SELECT c_custkey, c_mktsegment FROM customer WHERE c_acctbal > 5000.0
-            ORDER BY c_custkey NULLS FIRST, c_mktsegment NULLS FIRST"""))
+    """SELECT c_custkey, c_mktsegment FROM customer WHERE c_mktsegment = 'BUILDING'
+       UNION
+       SELECT c_custkey, c_mktsegment FROM customer WHERE c_acctbal > 5000.0
+       ORDER BY c_custkey NULLS FIRST, c_mktsegment NULLS FIRST""")
 
-  val setopIntersect: Q = Q(
+  val setopIntersect: Q = Q.sql(
     "setop_intersect",
-    (s, d) =>
-      segA(s, d).intersect(segB(s, d))
-        .orderBy(asc_nulls_first("c_custkey"), asc_nulls_first("c_mktsegment")),
-    Some("""SELECT c_custkey, c_mktsegment FROM customer WHERE c_mktsegment = 'BUILDING'
-            INTERSECT
-            SELECT c_custkey, c_mktsegment FROM customer WHERE c_acctbal > 5000.0
-            ORDER BY c_custkey NULLS FIRST, c_mktsegment NULLS FIRST"""))
+    """SELECT c_custkey, c_mktsegment FROM customer WHERE c_mktsegment = 'BUILDING'
+       INTERSECT
+       SELECT c_custkey, c_mktsegment FROM customer WHERE c_acctbal > 5000.0
+       ORDER BY c_custkey NULLS FIRST, c_mktsegment NULLS FIRST""")
 
-  val setopExcept: Q = Q(
+  val setopExcept: Q = Q.sql(
     "setop_except",
-    (s, d) =>
-      segA(s, d).except(segB(s, d))
-        .orderBy(asc_nulls_first("c_custkey"), asc_nulls_first("c_mktsegment")),
-    Some("""SELECT c_custkey, c_mktsegment FROM customer WHERE c_mktsegment = 'BUILDING'
-            EXCEPT
-            SELECT c_custkey, c_mktsegment FROM customer WHERE c_acctbal > 5000.0
-            ORDER BY c_custkey NULLS FIRST, c_mktsegment NULLS FIRST"""))
+    """SELECT c_custkey, c_mktsegment FROM customer WHERE c_mktsegment = 'BUILDING'
+       EXCEPT
+       SELECT c_custkey, c_mktsegment FROM customer WHERE c_acctbal > 5000.0
+       ORDER BY c_custkey NULLS FIRST, c_mktsegment NULLS FIRST""")
 
   /** Multiset EXCEPT ALL — bag semantics (each duplicate counted), the
     * set-op the DISTINCT-based EXCEPT can't express. One hash-aggregated
     * anti-count per side under the hood; columns chosen for heavy
     * duplication so the multiset arithmetic is actually exercised.
     */
-  // the two bag-semantics ops share their multiset sides: A (qty ≤ 25) and
-  // the deliberately narrower B (qty > 40), so differences/minima are
-  // non-trivial on every key
-  private def bagA(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.read(s, d, "lineitem")
-      .filter(col("l_quantity") <= 25)
-      .select(col("l_suppkey"), col("l_returnflag"))
-
-  private def bagB(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.read(s, d, "lineitem")
-      .filter(col("l_quantity") > 40)
-      .select(col("l_suppkey"), col("l_returnflag"))
-
-  val setopExceptAll: Q = Q(
+  val setopExceptAll: Q = Q.sql(
     "setop_except_all",
-    (s, d) =>
-      bagA(s, d).exceptAll(bagB(s, d))
-        .orderBy(asc_nulls_first("l_suppkey"), asc_nulls_first("l_returnflag")),
-    Some("""SELECT l_suppkey, l_returnflag FROM lineitem WHERE l_quantity <= 25
-            EXCEPT ALL
-            SELECT l_suppkey, l_returnflag FROM lineitem WHERE l_quantity > 40
-            ORDER BY l_suppkey NULLS FIRST, l_returnflag NULLS FIRST"""))
+    """SELECT l_suppkey, l_returnflag FROM lineitem WHERE l_quantity <= 25
+       EXCEPT ALL
+       SELECT l_suppkey, l_returnflag FROM lineitem WHERE l_quantity > 40
+       ORDER BY l_suppkey NULLS FIRST, l_returnflag NULLS FIRST""")
 
   /** Multiset INTERSECT ALL — min-of-multiplicities bag semantics. */
-  val setopIntersectAll: Q = Q(
+  val setopIntersectAll: Q = Q.sql(
     "setop_intersect_all",
-    (s, d) =>
-      bagA(s, d).intersectAll(bagB(s, d))
-        .orderBy(asc_nulls_first("l_suppkey"), asc_nulls_first("l_returnflag")),
-    Some("""SELECT l_suppkey, l_returnflag FROM lineitem WHERE l_quantity <= 25
-            INTERSECT ALL
-            SELECT l_suppkey, l_returnflag FROM lineitem WHERE l_quantity > 40
-            ORDER BY l_suppkey NULLS FIRST, l_returnflag NULLS FIRST"""))
+    """SELECT l_suppkey, l_returnflag FROM lineitem WHERE l_quantity <= 25
+       INTERSECT ALL
+       SELECT l_suppkey, l_returnflag FROM lineitem WHERE l_quantity > 40
+       ORDER BY l_suppkey NULLS FIRST, l_returnflag NULLS FIRST""")
 
   /** Snapshot diff / reconciliation — the validation a CDC pipeline runs
     * to certify sink == source (the reference's whole purpose, verified

@@ -20,10 +20,9 @@ object SourceOps {
     * prunes columns/partitions; at scale this is the JDBC/parquet backfill
     * leg of snapshot-then-stream.
     */
-  val srcSnapshotScan: Q = Q(
+  val srcSnapshotScan: Q = Q.sql(
     "src_snapshot_scan",
-    (s, d) => Tables.read(s, d, "customer").orderBy(asc_nulls_first("c_custkey")),
-    Some("SELECT * FROM customer ORDER BY c_custkey NULLS FIRST"))
+    "SELECT * FROM customer ORDER BY c_custkey NULLS FIRST")
 
   /** JDBC snapshot round-trip (the reference's production leg: table →
     * SQL database → partitioned snapshot read, reference `setup.sh:92`):
@@ -822,12 +821,6 @@ object SourceOps {
       }
     }.reduce(_ bitwiseOR _)
   }
-
-  /** 2-D special case (x even bits, y odd) — kept as the named seam the
-    * 2-D op and spec use.
-    */
-  private[operators] def zInterleave(xb: Column, yb: Column, bits: Int): Column =
-    zInterleaveK(Seq(xb, yb), bits)
 
   /** Z-order (Morton-curve) data layout + 2-D-pruned read-back — the
     * multi-dimensional generalization of `src_partitioned_roundtrip`'s

@@ -18,113 +18,60 @@ object Windows {
 
   private val byCust = Window.partitionBy(col("o_custkey"))
 
-  val winRowNumber: Q = Q(
+  val winRowNumber: Q = Q.sql(
     "win_row_number",
-    (s, d) =>
-      Tables.read(s, d, "orders")
-        .select(col("o_orderkey"), col("o_custkey"),
-          row_number().over(byCust.orderBy(col("o_orderdate"), col("o_orderkey")))
-            .cast(LongType).as("rn"))
-        .orderBy(asc_nulls_first("o_orderkey")),
-    Some("""SELECT o_orderkey, o_custkey,
-                   CAST(row_number() OVER (PARTITION BY o_custkey
-                        ORDER BY o_orderdate, o_orderkey) AS BIGINT) AS rn
-            FROM orders ORDER BY o_orderkey NULLS FIRST"""))
+    """SELECT o_orderkey, o_custkey,
+              CAST(row_number() OVER (PARTITION BY o_custkey
+                   ORDER BY o_orderdate, o_orderkey) AS BIGINT) AS rn
+       FROM orders ORDER BY o_orderkey NULLS FIRST""")
 
-  val winRankDense: Q = Q(
+  val winRankDense: Q = Q.sql(
     "win_rank_dense",
-    (s, d) => {
-      val w = Window.partitionBy(col("o_orderstatus")).orderBy(col("o_orderpriority"))
-      Tables.read(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"),
-          rank().over(w).cast(LongType).as("rnk"),
-          dense_rank().over(w).cast(LongType).as("drnk"))
-        .orderBy(asc_nulls_first("o_orderkey"))
-    },
-    Some("""SELECT o_orderkey, o_orderstatus, o_orderpriority,
-                   CAST(rank() OVER (PARTITION BY o_orderstatus ORDER BY o_orderpriority) AS BIGINT) AS rnk,
-                   CAST(dense_rank() OVER (PARTITION BY o_orderstatus ORDER BY o_orderpriority) AS BIGINT) AS drnk
-            FROM orders ORDER BY o_orderkey NULLS FIRST"""))
+    """SELECT o_orderkey, o_orderstatus, o_orderpriority,
+              CAST(rank() OVER (PARTITION BY o_orderstatus ORDER BY o_orderpriority) AS BIGINT) AS rnk,
+              CAST(dense_rank() OVER (PARTITION BY o_orderstatus ORDER BY o_orderpriority) AS BIGINT) AS drnk
+       FROM orders ORDER BY o_orderkey NULLS FIRST""")
 
-  val winLagLead: Q = Q(
+  val winLagLead: Q = Q.sql(
     "win_lag_lead",
-    (s, d) => {
-      val w = byCust.orderBy(col("o_orderkey"))
-      Tables.read(s, d, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-          lag(col("o_totalprice"), 1, -1.0).over(w).as("prev_price"),
-          lead(col("o_totalprice"), 1, -1.0).over(w).as("next_price"))
-        .orderBy(asc_nulls_first("o_orderkey"))
-    },
-    Some("""SELECT o_orderkey, o_custkey, o_totalprice,
-                   lag(o_totalprice, 1, -1.0) OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS prev_price,
-                   lead(o_totalprice, 1, -1.0) OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS next_price
-            FROM orders ORDER BY o_orderkey NULLS FIRST"""))
+    """SELECT o_orderkey, o_custkey, o_totalprice,
+              lag(o_totalprice, 1, -1.0) OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS prev_price,
+              lead(o_totalprice, 1, -1.0) OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS next_price
+       FROM orders ORDER BY o_orderkey NULLS FIRST""")
 
-  val winRunningSum: Q = Q(
+  val winRunningSum: Q = Q.sql(
     "win_running_sum",
-    (s, d) => {
-      val w = byCust.orderBy(col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.read(s, d, "orders")
-        .select(col("o_orderkey"), col("o_custkey"),
-          sum(col("o_totalprice").cast(DecimalType(18, 2))).over(w)
-            .cast(DoubleType).as("running_total"))
-        .orderBy(asc_nulls_first("o_orderkey"))
-    },
-    Some("""SELECT o_orderkey, o_custkey,
-                   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-                        OVER (PARTITION BY o_custkey ORDER BY o_orderkey
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total
-            FROM orders ORDER BY o_orderkey NULLS FIRST"""))
+    """SELECT o_orderkey, o_custkey,
+              CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
+                   OVER (PARTITION BY o_custkey ORDER BY o_orderkey
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total
+       FROM orders ORDER BY o_orderkey NULLS FIRST""")
 
   /** (l_orderkey, l_linenumber) is NOT unique in this corpus, so both the
     * window order and the output order extend to a full-row total order —
     * remaining ties are fully identical rows, which cannot change a frame
     * sum or the compared output.
     */
-  val winSlidingFrame: Q = Q(
+  val winSlidingFrame: Q = Q.sql(
     "win_sliding_frame",
-    (s, d) => {
-      val w = Window.partitionBy(col("l_suppkey"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-          col("l_quantity"), col("l_extendedprice"), col("l_discount"),
-          col("l_tax"), col("l_returnflag"), col("l_linestatus"), col("l_shipdate"))
-        .rowsBetween(-3, Window.currentRow)
-      Tables.read(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_suppkey"),
-          sum(col("l_quantity").cast(DecimalType(18, 2))).over(w)
-            .cast(DoubleType).as("moving_qty"))
-        .orderBy(asc_nulls_first("l_orderkey"), asc_nulls_first("l_linenumber"),
-          asc_nulls_first("l_suppkey"), asc_nulls_first("moving_qty"))
-    },
-    Some("""SELECT l_orderkey, l_linenumber, l_suppkey,
-                   CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
-                        OVER (PARTITION BY l_suppkey ORDER BY l_orderkey, l_linenumber,
-                              l_partkey, l_quantity, l_extendedprice, l_discount,
-                              l_tax, l_returnflag, l_linestatus, l_shipdate
-                              ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS DOUBLE) AS moving_qty
-            FROM lineitem
-            ORDER BY l_orderkey NULLS FIRST, l_linenumber NULLS FIRST,
-                     l_suppkey NULLS FIRST, moving_qty NULLS FIRST"""))
+    """SELECT l_orderkey, l_linenumber, l_suppkey,
+              CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
+                   OVER (PARTITION BY l_suppkey ORDER BY l_orderkey, l_linenumber,
+                         l_partkey, l_quantity, l_extendedprice, l_discount,
+                         l_tax, l_returnflag, l_linestatus, l_shipdate
+                         ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS DOUBLE) AS moving_qty
+       FROM lineitem
+       ORDER BY l_orderkey NULLS FIRST, l_linenumber NULLS FIRST,
+                l_suppkey NULLS FIRST, moving_qty NULLS FIRST""")
 
   /** RANGE frame over a numeric sort key. */
-  val winRangeFrame: Q = Q(
+  val winRangeFrame: Q = Q.sql(
     "win_range_frame",
-    (s, d) => {
-      val w = Window.partitionBy(col("p_brand")).orderBy(col("p_partkey"))
-        .rangeBetween(-50, Window.currentRow)
-      Tables.read(s, d, "part")
-        .select(col("p_partkey"), col("p_brand"),
-          sum(col("p_retailprice").cast(DecimalType(18, 2))).over(w)
-            .cast(DoubleType).as("range_total"))
-        .orderBy(asc_nulls_first("p_partkey"))
-    },
-    Some("""SELECT p_partkey, p_brand,
-                   CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2)))
-                        OVER (PARTITION BY p_brand ORDER BY p_partkey
-                              RANGE BETWEEN 50 PRECEDING AND CURRENT ROW) AS DOUBLE) AS range_total
-            FROM part ORDER BY p_partkey NULLS FIRST"""))
+    """SELECT p_partkey, p_brand,
+              CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2)))
+                   OVER (PARTITION BY p_brand ORDER BY p_partkey
+                         RANGE BETWEEN 50 PRECEDING AND CURRENT ROW) AS DOUBLE) AS range_total
+       FROM part ORDER BY p_partkey NULLS FIRST""")
 
   val winFirstLast: Q = Q(
     "win_first_last",
@@ -145,16 +92,11 @@ object Windows {
                          ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
             ORDER BY o_orderkey NULLS FIRST"""))
 
-  val winNtile: Q = Q(
+  val winNtile: Q = Q.sql(
     "win_ntile",
-    (s, d) =>
-      Tables.read(s, d, "orders")
-        .select(col("o_orderkey"),
-          ntile(4).over(Window.orderBy(col("o_orderkey"))).cast(LongType).as("quartile"))
-        .orderBy(asc_nulls_first("o_orderkey")),
-    Some("""SELECT o_orderkey,
-                   CAST(ntile(4) OVER (ORDER BY o_orderkey) AS BIGINT) AS quartile
-            FROM orders ORDER BY o_orderkey NULLS FIRST"""))
+    """SELECT o_orderkey,
+              CAST(ntile(4) OVER (ORDER BY o_orderkey) AS BIGINT) AS quartile
+       FROM orders ORDER BY o_orderkey NULLS FIRST""")
 
   /** Top-k per group: the window-filter idiom (no global sort; one shuffle
     * on the group key).
@@ -181,20 +123,12 @@ object Windows {
   /** percent_rank + cume_dist over a unique-key order: both are exact
     * integer ratios ((rank-1)/(n-1), rank/n) so they hash-match.
     */
-  val winPercentCume: Q = Q(
+  val winPercentCume: Q = Q.sql(
     "win_percent_cume",
-    (s, d) => {
-      val w = byCust.orderBy(col("o_orderkey"))
-      Tables.read(s, d, "orders")
-        .select(col("o_orderkey"), col("o_custkey"),
-          percent_rank().over(w).as("pr"),
-          cume_dist().over(w).as("cd"))
-        .orderBy(asc_nulls_first("o_orderkey"))
-    },
-    Some("""SELECT o_orderkey, o_custkey,
-                   percent_rank() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS pr,
-                   cume_dist() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS cd
-            FROM orders ORDER BY o_orderkey NULLS FIRST"""))
+    """SELECT o_orderkey, o_custkey,
+              percent_rank() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS pr,
+              cume_dist() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS cd
+       FROM orders ORDER BY o_orderkey NULLS FIRST""")
 
   /** nth_value over the whole partition (explicit unbounded frame — the
     * default running frame would return NULL until the nth row, a classic
@@ -202,22 +136,14 @@ object Windows {
     * order total. Ties on the full sort key carry the same value, so the
     * result is engine-stable.
     */
-  val winNthValue: Q = Q(
+  val winNthValue: Q = Q.sql(
     "win_nth_value",
-    (s, d) => {
-      val w = byCust.orderBy(col("o_totalprice"), col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      Tables.read(s, d, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-          nth_value(col("o_totalprice"), 2).over(w).as("second_cheapest"))
-        .orderBy(asc_nulls_first("o_orderkey"))
-    },
-    Some("""SELECT o_orderkey, o_custkey, o_totalprice,
-                   nth_value(o_totalprice, 2) OVER (PARTITION BY o_custkey
-                     ORDER BY o_totalprice, o_orderkey
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-                     AS second_cheapest
-            FROM orders ORDER BY o_orderkey NULLS FIRST"""))
+    """SELECT o_orderkey, o_custkey, o_totalprice,
+              nth_value(o_totalprice, 2) OVER (PARTITION BY o_custkey
+                ORDER BY o_totalprice, o_orderkey
+                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+                AS second_cheapest
+       FROM orders ORDER BY o_orderkey NULLS FIRST""")
 
   /** Running DISTINCT count per key — `count(DISTINCT x) OVER (...)` is
     * unsupported in both engines, so this is the standard two-window

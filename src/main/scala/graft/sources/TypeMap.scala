@@ -31,21 +31,6 @@ object TypeMap {
     case _                             => "String"
   }
 
-  /** Postgres type → Spark type (SURVEY §1.2 lattice). Spark has no unsigned
-    * ints, so integer/bigint widen to Long/Decimal(20,0) to cover the
-    * UInt32/UInt64 ranges the reference maps them to.
-    */
-  def pgToSpark(dataType: String): DataType = dataType match {
-    case "integer"                     => LongType
-    case "bigint"                      => DecimalType(20, 0)
-    case "numeric"                     => DecimalType(18, 2)
-    case "text"                        => StringType
-    case "character varying"           => StringType
-    case "timestamp without time zone" => TimestampNTZType
-    case "uuid"                        => StringType
-    case _                             => StringType
-  }
-
   /** Spark type → ClickHouse type, for DDL synthesis from a live
     * `df.schema` (the Spark-native analogue of the reference's
     * information_schema introspection at `setup.sh:36-53`).

@@ -81,7 +81,7 @@ final class KeyedLazyCache[K, V](
 
   private val map = new java.util.LinkedHashMap[K, Once[V]](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[K, Once[V]]): Boolean = {
-      val evict = size() > maxEntries
+      val evict = this.size() > maxEntries
       // retire-eligibility is decided HERE, not at drain time: a slot
       // still mid-build now may finish before the drain runs, and
       // retiring it then would destroy a value its builder's caller is

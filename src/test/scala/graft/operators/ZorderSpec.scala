@@ -13,10 +13,10 @@ class ZorderSpec extends SparkSpec {
 
   private def z(x: Long, y: Long, bits: Int): Long =
     spark.range(1).select(
-      SourceOps.zInterleave(lit(x), lit(y), bits).as("z"))
+      SourceOps.zInterleaveK(Seq(lit(x), lit(y)), bits).as("z"))
       .head().getLong(0)
 
-  test("zInterleave puts x bits at even, y bits at odd positions") {
+  test("zInterleaveK puts x bits at even, y bits at odd positions") {
     assert(z(3, 0, 2) == 5L)   // 11  -> 0101
     assert(z(0, 3, 2) == 10L)  // 11  -> 1010
     assert(z(5, 6, 3) == 57L)  // 101/110 -> 111001

@@ -15,12 +15,21 @@ directories); the script reads perfbench/ and BENCHMARK.json and changes no
 tracked file in either checkout.
 
 For every end-to-end metric of BENCHMARK.json it prints each side's median
-and quartiles and the number of pairs the change won (better in the
-metric's direction), then whether a claimed gain holds: at least 10 pairs
-were run, the change wins at least 90% of them and its median beats the
-parent's by more than the parent's interquartile range. Quartiles
-interpolate linearly between order statistics. A run with "correct": false
-or failed operations is reported and counted as lost by the change.
+and quartiles, the number of pairs the change won (better in the metric's
+direction), and two verdicts. Regression, against the metric's `bound` (a
+fraction of the parent's median):
+  worse       the change's median is worse than the parent's by more than
+              the bound;
+  unresolved  otherwise, when the parent's interquartile range is wider than
+              the bound and not every change run beats every parent run;
+  ok          otherwise.
+Gain holds: at least 10 pairs were run, the change wins at least 90% of
+them and its median beats the parent's by more than the parent's
+interquartile range. Quartiles interpolate linearly between order
+statistics. A run that exits non-zero is recorded as failed, with no
+metrics; it and a run with "correct": false or failed operations count as
+lost by their side. `--out` is rewritten after every run, so a failure
+never loses the pairs before it.
 """
 import argparse
 import json
@@ -38,7 +47,9 @@ def run_once(checkout, workload, seed, seconds):
     lines = [l for l in p.stdout.splitlines() if l.strip()]
     if p.returncode != 0 or not lines:
         sys.stderr.write(p.stderr[-2000:])
-        raise SystemExit(f"ab: {checkout} seed {seed} failed (exit {p.returncode})")
+        sys.stderr.write(f"ab: {checkout} seed {seed} failed (exit {p.returncode})\n")
+        return {"correct": False, "failed": None, "attempted": None,
+                "exit": p.returncode, "metrics": {}}
     return json.loads(lines[-1])
 
 
@@ -79,32 +90,42 @@ def main():
                      for m in metrics if m["name"] in r["metrics"]}
             print(f"pair {i + 1}/{a.pairs} seed {seed} {side}: correct={r['correct']} "
                   f"failed={r['failed']}/{r['attempted']} {shown}", flush=True)
-    if a.out:
-        with open(a.out, "w") as fh:
-            json.dump({"workload": a.workload, "seeds": seeds, "runs": runs}, fh, indent=1)
+            if a.out:
+                with open(a.out, "w") as fh:
+                    json.dump({"workload": a.workload, "seeds": seeds, "runs": runs},
+                              fh, indent=1)
 
     def ok(r):
         return r["correct"] and r["failed"] == 0
 
     print(f"\n{a.workload}: {a.pairs} pairs, seeds {seeds}")
     print(f"{'metric':14} {'parent median [q1, q3]':>30} {'change median [q1, q3]':>30} "
-          f"{'wins':>6}  gain holds")
+          f"{'wins':>6}  {'regression':10}  gain holds")
     for m in metrics:
         name = m["name"]
-        if not all(name in r["metrics"] for s in runs.values() for r in s):
+        pv = [r["metrics"].get(name, {}).get("value") for r in runs["parent"]]
+        cv = [r["metrics"].get(name, {}).get("value") for r in runs["change"]]
+        pk, ck = [v for v in pv if v is not None], [v for v in cv if v is not None]
+        if not pk or not ck:
             continue
         sign = 1 if m["better"] == "higher" else -1
-        pv = [r["metrics"][name]["value"] for r in runs["parent"]]
-        cv = [r["metrics"][name]["value"] for r in runs["change"]]
-        wins = sum(1 for p, c, rc in zip(pv, cv, runs["change"])
-                   if ok(rc) and sign * (c - p) > 0)
-        pq, cq = quartiles(pv), quartiles(cv)
+        wins = sum(1 for p, c, rp, rc in zip(pv, cv, runs["parent"], runs["change"])
+                   if ok(rc) and c is not None
+                   and (not ok(rp) or p is None or sign * (c - p) > 0))
+        pq, cq = quartiles(pk), quartiles(ck)
         holds = (a.pairs >= 10 and wins >= math.ceil(0.9 * a.pairs)
                  and sign * (cq[1] - pq[1]) > pq[2] - pq[0])
+        bound = m["bound"] * abs(pq[1])
+        if sign * (cq[1] - pq[1]) < -bound:
+            verdict = "worse"
+        elif pq[2] - pq[0] > bound and not all(sign * (c - p) > 0 for c in ck for p in pk):
+            verdict = "unresolved"
+        else:
+            verdict = "ok"
         ratio = f"  (median ratio {cq[1] / pq[1]:.3f})" if pq[1] else ""
         print(f"{name:14} {pq[1]:12.1f} [{pq[0]:.1f}, {pq[2]:.1f}]".ljust(45)
               + f" {cq[1]:12.1f} [{cq[0]:.1f}, {cq[2]:.1f}]".ljust(31)
-              + f" {wins:3}/{a.pairs}  {'yes' if holds else 'no'}{ratio}")
+              + f" {wins:3}/{a.pairs}  {verdict:10}  {'yes' if holds else 'no'}{ratio}")
     bad = {s: sum(1 for r in rs if not ok(r)) for s, rs in runs.items()}
     print(f"runs not correct or with failed operations: {bad}")
 
