@@ -514,20 +514,10 @@ object SourceOps {
     */
   val opScd2Intervals: Q = Q(
     "op_scd2_intervals",
-    (s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-      Tables.read(s, d, "events")
+    (s, d) => Upsert.scd2Intervals(Tables.read(s, d, "events")
         .select(col("user_id"), col("event_id"), col("value"),
-          expr("ts div 1000").as("ts_us"))
-        .withColumn("valid_from_us", col("ts_us"))
-        .withColumn("valid_to_us", lead(col("ts_us"), 1).over(w))
-        .withColumn("is_current", col("valid_to_us").isNull)
-        .select(col("user_id"), col("event_id"), col("value"),
-          col("valid_from_us"), col("valid_to_us"), col("is_current"))
-        .orderBy(asc_nulls_first("user_id"), asc("valid_from_us"),
-          asc("event_id"))
-    },
+          expr("ts div 1000").as("ts_us")))
+      .orderBy(asc_nulls_first("user_id"), asc("valid_from_us"), asc("event_id")),
     Some("""WITH e AS (SELECT user_id, event_id, value, epoch_us(ts) AS ts_us
                        FROM events)
             SELECT user_id, event_id, value,
@@ -557,21 +547,13 @@ object SourceOps {
   val sinkScd2Apply: Q = Q(
     "sink_scd2_apply",
     (s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-      def scd2(rows: DataFrame): DataFrame = rows
-        .withColumn("valid_from_us", col("ts_us"))
-        .withColumn("valid_to_us", lead(col("ts_us"), 1).over(w))
-        .withColumn("is_current", col("valid_to_us").isNull)
-        .select(col("user_id"), col("event_id"), col("value"),
-          col("valid_from_us"), col("valid_to_us"), col("is_current"))
       val ev = Tables.read(s, d, "events")
         .select(col("user_id"), col("event_id"), col("value"),
           expr("ts div 1000").as("ts_us"),
           expr("(ts div 1000) div 86400000000").as("day"))
       // O(1) driver scalar, reproduced by the oracle's own min-day agg
       val cut = ev.agg(min(col("day"))).head.getLong(0) + 15L
-      val base = scd2(ev.filter(col("day") < cut)
+      val base = Upsert.scd2Intervals(ev.filter(col("day") < cut)
         .select(col("user_id"), col("event_id"), col("value"), col("ts_us")))
         .truncated // the apply references base three ways — cut the replay
       val delta = ev.filter(col("day") >= cut)
@@ -591,7 +573,8 @@ object SourceOps {
       val reopened = touchedBase.filter(col("is_current"))
         .select(col("user_id"), col("event_id"), col("value"),
           col("valid_from_us").as("ts_us"))
-      untouched.unionByName(closed).unionByName(scd2(reopened.unionByName(delta)))
+      untouched.unionByName(closed)
+        .unionByName(Upsert.scd2Intervals(reopened.unionByName(delta)))
         .orderBy(asc_nulls_first("user_id"), asc("valid_from_us"), asc("event_id"))
     },
     Some("""WITH e AS (SELECT user_id, event_id, value, epoch_us(ts) AS ts_us

@@ -30,6 +30,21 @@ object Upsert {
       .drop("__rn")
   }
 
+  /** SCD type-2 validity intervals of a change stream keyed by `user_id`:
+    * each row is valid from its own `ts_us` until the key's next change
+    * (`lead` over `(ts_us, event_id)`), and the key's last row
+    * `is_current`. Returns `user_id, event_id, value, valid_from_us,
+    * valid_to_us, is_current`, then the `keep` columns.
+    */
+  def scd2Intervals(rows: DataFrame, keep: String*): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
+    rows.withColumn("valid_from_us", col("ts_us"))
+      .withColumn("valid_to_us", lead(col("ts_us"), 1).over(w))
+      .withColumn("is_current", col("valid_to_us").isNull)
+      .select((Seq("user_id", "event_id", "value", "valid_from_us", "valid_to_us",
+        "is_current") ++ keep).map(col): _*)
+  }
+
   /** Apply a CDC op-log with the reference's delete semantics: tombstones are
     * dropped before they ever reach the sink (`tombstones.on.delete=false` +
     * `drop.tombstones`, reference `setup.sh:94,107`), so state = latest

@@ -16,7 +16,7 @@ import graft.util.Memo
   * `writeStream` with checkpointing — executed with `Trigger.AvailableNow`
   * so the driver's batch-oriented Verify/Bench harness can consume it. The
   * memory sink is test-scale only; the production sink is
-  * `foreachBatch` / files (see StreamingOps.foreachBatchUpsert).
+  * `foreachBatch` into versioned files ([[StreamingOps.StateChain]]).
   */
 object StreamRunner {
   private val counter = new AtomicInteger(0)

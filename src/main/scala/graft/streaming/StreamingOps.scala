@@ -1,9 +1,12 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -11,7 +14,7 @@ import org.apache.spark.sql.types._
 
 import graft.{Q, Tables}
 import graft.operators.Upsert
-import graft.util.Memo
+import graft.util.{Memo, TempDirs}
 
 /** SURVEY §2.7 — Structured Streaming.
   *
@@ -177,47 +180,16 @@ object StreamingOps {
             FROM (SELECT DISTINCT event_id, event_type FROM events) t
             GROUP BY event_type ORDER BY event_type NULLS FIRST"""))
 
-  /** The full CDC sink: micro-batch upsert into keyed state via
-    * foreachBatch + checkpoint. State is versioned by batch id
-    * (`state/v<id>`); the predecessor version is derived by LISTING the
-    * durable `state/` directory (never a driver-JVM variable), so a
-    * restart-from-checkpoint that replays batch `id` re-merges the same
-    * prior state and overwrites the same version — idempotent replay, which
-    * makes at-least-once delivery exactly-once in effect (reference
-    * `setup.sh:101-103,144-147` + ReplacingMergeTree semantics).
+  /** The full CDC sink: micro-batch upsert into keyed state through a
+    * [[StateChain]] (foreachBatch + checkpoint, one state version per
+    * batch id, idempotent under replay), merging by ReplacingMergeTree's
+    * latest row per key (reference `setup.sh:101-103,144-147`).
     * Golden-replay tested; rows-only check here.
     */
   val streamForeachBatchUpsert: Q = Q(
     "stream_foreachbatch_upsert",
-    (s, d) => {
-      val base = graft.util.TempDirs.create("graft_upsert").toString
-      val cp = s"$base/checkpoint"
-      val stateBase = s"$base/state"
-      // version = (µs, event_id) — the portable ordering every upsert op
-      // in the library uses (raw nanos are Spark-only; the event_id
-      // tiebreak decides equal-µs collisions identically cross-engine)
-      val src = streamedEvents(s, d)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), expr("ts div 1000").as("ts_us"))
-      val mergeBatch: (DataFrame, Long) => Unit = (batch, id) => {
-        val prev = latestVersionBelow(stateBase, id) match {
-          case Some(v) => batch.sparkSession.read.parquet(s"$stateBase/v$v")
-          case None    => batch.limit(0)
-        }
-        Upsert.latestByKey(prev.unionByName(batch),
-            Seq(col("user_id")), Seq(col("ts_us"), col("event_id")))
-          .write.mode("overwrite").parquet(s"$stateBase/v$id")
-      }
-      val query = src.writeStream
-        .foreachBatch(mergeBatch)
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      val last = latestVersionBelow(stateBase, Long.MaxValue)
-        .getOrElse(throw new IllegalStateException(s"no state written under $stateBase"))
-      s.read.parquet(s"$stateBase/v$last").orderBy(asc_nulls_first("user_id"))
-    },
+    (s, d) => StateChain.run(s, "graft_upsert", keyedEvents(streamedEvents(s, d)))(
+      latestPerUser).orderBy(asc_nulls_first("user_id")),
     Some("""WITH ranked AS (
               SELECT user_id, event_id, event_type, value, epoch_us(ts) AS ts_us,
                      row_number() OVER (PARTITION BY user_id
@@ -226,17 +198,30 @@ object StreamingOps {
             SELECT user_id, event_id, event_type, value, ts_us
             FROM ranked WHERE rn = 1 ORDER BY user_id NULLS FIRST"""))
 
+  /** The upsert cells' rows. version = (µs, event_id) — the portable
+    * ordering every upsert op in the library uses (raw nanos are
+    * Spark-only; the event_id tiebreak decides equal-µs collisions
+    * identically cross-engine).
+    */
+  private def keyedEvents(df: DataFrame): DataFrame = df.select(
+    col("user_id"), col("event_id"), col("event_type"),
+    col("value"), expr("ts div 1000").as("ts_us"))
+
+  private val latestPerUser: (Option[DataFrame], DataFrame) => DataFrame =
+    (prev, batch) => Upsert.latestByKey(prev.fold(batch)(_.unionByName(batch)),
+      Seq(col("user_id")), Seq(col("ts_us"), col("event_id")))
+
   /** Snapshot→stream handoff (`snapshot.mode=initial`, reference
     * `setup.sh:92`): the no-gap/no-overlap contract between the initial
     * batch backfill and the WAL stream, proven as ONE composed operator.
-    * A consistent keyed snapshot at cut = max(event_id)/2 seeds durable
-    * state v0; the WAL leg then replays every record with `event_id >
+    * A consistent keyed snapshot at cut = max(event_id)/2 seeds the
+    * durable state; the WAL leg then replays every record with `event_id >
     * cut − 100` — the replay deliberately re-covers the last 100 ids
     * BELOW the cut, because a real connector restarts from an LSN at or
     * before the snapshot's consistent point and relies on version-aware
     * apply (not exact offsets) to dedup the seam. Each micro-batch
-    * merges into the durable state via the same listing-derived
-    * version chain as [[streamForeachBatchUpsert]] (idempotent replay).
+    * merges into the durable state through the same [[StateChain]] as
+    * [[streamForeachBatchUpsert]] (idempotent replay).
     * The merged final state must equal the pure-batch latest-per-key
     * over the FULL corpus — the SIGMOD'18 prefix-equivalence property
     * applied to the seam — which is exactly what the DuckDB oracle
@@ -263,42 +248,17 @@ object StreamingOps {
   private[graft] def snapshotHandoff(
       s: SparkSession, d: String, overlap: Long = 100L,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val base = graft.util.TempDirs.create("graft_handoff").toString
-    val cp = s"$base/checkpoint"
-    val stateBase = s"$base/state"
-    val keyed = (df: DataFrame) => df.select(
-      col("user_id"), col("event_id"), col("event_type"),
-      col("value"), expr("ts div 1000").as("ts_us"))
-    val ev = keyed(Tables.read(s, d, "events"))
+    val ev = keyedEvents(Tables.read(s, d, "events"))
     val maxRow = ev.agg(max(col("event_id"))).head()
     require(!maxRow.isNullAt(0),
       "events is empty — max(event_id) is NULL, no snapshot cut derivable")
     val cut = maxRow.getLong(0) / 2
-    Upsert.latestByKey(ev.filter(col("event_id") <= cut),
-        Seq(col("user_id")), Seq(col("ts_us"), col("event_id")))
-      .write.mode("overwrite").parquet(s"$stateBase/v0")
-    // WAL replay from below the cut; micro-batch versions sit at id+1 so
-    // the snapshot seed (v0) is always the chain's root
-    val wal = keyed(streamedEvents(s, d, maxFilesPerTrigger))
+    val wal = keyedEvents(streamedEvents(s, d, maxFilesPerTrigger))
       .filter(col("event_id") > cut - overlap)
-    val mergeBatch: (DataFrame, Long) => Unit = (batch, id) => {
-      val prev = latestVersionBelow(stateBase, id + 1) match {
-        case Some(v) => batch.sparkSession.read.parquet(s"$stateBase/v$v")
-        case None    => batch.limit(0)
-      }
-      Upsert.latestByKey(prev.unionByName(batch),
-          Seq(col("user_id")), Seq(col("ts_us"), col("event_id")))
-        .write.mode("overwrite").parquet(s"$stateBase/v${id + 1}")
-    }
-    val query = wal.writeStream
-      .foreachBatch(mergeBatch)
-      .option("checkpointLocation", cp)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    val last = latestVersionBelow(stateBase, Long.MaxValue)
-      .getOrElse(throw new IllegalStateException(s"no state under $stateBase"))
-    s.read.parquet(s"$stateBase/v$last").orderBy(asc_nulls_first("user_id"))
+    StateChain.run(s, "graft_handoff", wal,
+        seed = Some(latestPerUser(None, ev.filter(col("event_id") <= cut))))(
+        latestPerUser)
+      .orderBy(asc_nulls_first("user_id"))
   }
 
   /** Prepared on-time/late file split for `stream_watermark_late`, one per
@@ -309,7 +269,7 @@ object StreamingOps {
     */
   private def lateSplitDir(s: SparkSession, d: String): Path =
     Memo.corpus(d, "late_split") {
-      val base = graft.util.TempDirs.create("graft_late")
+      val base = TempDirs.create("graft_late")
       val streamDir = base.resolve("stream")
       Files.createDirectories(streamDir)
       val ev = Tables.read(s, d, "events")
@@ -321,25 +281,6 @@ object StreamingOps {
         base.resolve("f2"), streamDir.resolve("f2.parquet"), 2000000L)
       streamDir
     }
-
-  /** Largest committed state version strictly below `id` (durable pointer:
-    * derived from the state directory itself, survives driver restarts).
-    */
-  private def latestVersionBelow(stateBase: String, id: Long): Option[Long] = {
-    val dir = Paths.get(stateBase)
-    if (!Files.isDirectory(dir)) None
-    else {
-      val stream = Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        stream.iterator().asScala
-          .map(_.getFileName.toString)
-          .collect { case s if s.startsWith("v") => s.drop(1).toLong }
-          .filter(_ < id)
-          .maxOption
-      } finally stream.close()
-    }
-  }
 
   /** Write df as exactly one parquet part-file at `dest` with a pinned
     * mtime, so the file-stream source discovers files in a deterministic
@@ -393,11 +334,6 @@ object StreamingOps {
                    CAST(count(*) AS BIGINT) AS n_events
             FROM events GROUP BY user_id ORDER BY user_id NULLS FIRST"""))
 
-  /** `flatMapGroupsWithState` surface — the 0..n-rows-per-key sibling of
-    * mapGroupsWithState: per user, emit one row PER DISTINCT EVENT TYPE
-    * with its count, maintained as custom map state across micro-batches.
-    * Batch equivalent: groupBy(user, type).count — spec-tested.
-    */
   /** Stream-static join — the everyday enrichment shape (stream ⋈
     * dimension): each streamed event joins a STATIC dimension the planner
     * broadcasts into every micro-batch; no watermark, no join state, no
@@ -446,6 +382,11 @@ object StreamingOps {
             FROM events JOIN dim USING (event_type)
             GROUP BY type_label ORDER BY type_label NULLS FIRST"""))
 
+  /** `flatMapGroupsWithState` surface — the 0..n-rows-per-key sibling of
+    * mapGroupsWithState: per user, emit one row PER DISTINCT EVENT TYPE
+    * with its count, maintained as custom map state across micro-batches.
+    * Batch equivalent: groupBy(user, type).count — spec-tested.
+    */
   val streamFlatmapTypeCounts: Q = Q(
     "stream_flatmap_type_counts",
     (s, d) => {
@@ -769,19 +710,15 @@ object StreamingOps {
             ORDER BY event_type NULLS FIRST"""))
 
   /** Continuous materialized-view maintenance — the STREAMING counterpart
-    * of `sink_mv_incremental_refresh`: each micro-batch aggregates to
-    * (sum, count) partials per (day, event_type) and MERGES them into the
-    * durable MV state, TOUCHED PARTITIONS ONLY — the same
-    * refresh-cost-∝-touched-data shape as the batch sibling. State is a
-    * PER-DAY version chain (`state/day=<day>/v<batchId>/`): a batch
-    * lists its touched days (an O(#touched) driver scalar, like the
-    * batch sibling's touched-day list), partition-reads just those
-    * days' newest versions strictly below the batch id, merges, and
-    * writes ONLY those days under the batch's version — untouched days
-    * pass through by reference, so each batch READS and WRITES ∝ batch
-    * rows, never MV size. Replay is idempotent by construction: a
-    * replayed batch re-reads versions strictly below its id (never its
-    * own crashed partial write) and deterministically rewrites them.
+    * of `sink_mv_incremental_refresh`: each micro-batch MERGES its
+    * (sum, count) per (day, event_type) into the durable MV state,
+    * TOUCHED PARTITIONS ONLY — the same refresh-cost-∝-touched-data shape
+    * as the batch sibling. State is a [[StateChain]] partitioned by day
+    * (`state/day=<day>/v<batchId>/`, a NULL day in Hive's default
+    * partition): a batch reads just its touched days' newest versions
+    * strictly below its id, merges, and writes ONLY those days under its
+    * version — untouched days pass through by reference, so each batch
+    * READS and WRITES ∝ batch rows, never MV size.
     * (sum, count) partials are associative-commutative, so ANY batch
     * split yields the identical final MV — the prefix-equivalence
     * property the DuckDB oracle hash-checks as one full-corpus
@@ -794,113 +731,31 @@ object StreamingOps {
     * aggregation shape — with state one day-partitioned keyed table,
     * never the event log.
     */
-  /** Hive-default-partition spelling for a NULL day (what
-    * `partitionBy("day")` itself writes), so a null-day batch routes
-    * through the same per-day chain as any other day.
-    */
-  private val NullDayDir = "__HIVE_DEFAULT_PARTITION__"
-
-  private def dayDirName(day: Option[Long]): String =
-    day.map(_.toString).getOrElse(NullDayDir)
-
   private[streaming] def mvMaintainedState(s: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val base = graft.util.TempDirs.create("graft_stream_mv").toString
-    val cp = s"$base/checkpoint"
-    val stateBase = s"$base/state"
     val src = streamedEvents(s, d, maxFilesPerTrigger)
       .select(expr("(ts div 1000) div 86400000000").as("day"),
         col("event_type"), col("value"))
-    val mergeBatch: (DataFrame, Long) => Unit = (batch, id) => {
-      val ss = batch.sparkSession
-      val partial = batch.groupBy(col("day"), col("event_type"))
-        .agg(sum(col("value").cast(DecimalType(18, 2))).as("s"),
-          count(lit(1)).as("n"))
-        // pin the stored schema: sum(DECIMAL(18,2)) widens per merge
-        // round otherwise, drifting the state schema version to version
-        .select(col("day"), col("event_type"),
-          col("s").cast(DecimalType(28, 2)).as("s"), col("n"))
-        .persist()
-      try {
-        val touched: Seq[Option[Long]] = partial.select(col("day")).distinct()
-          .collect().toSeq.map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
-        if (touched.nonEmpty) {
-          // prev state for the touched days: their newest versions
-          // strictly below this batch id, ONE multi-path scan (the data
-          // files keep the `day` column — the partition dir name is
-          // routing metadata, not the only copy of the value)
-          val prevDirs = touched.flatMap { day =>
-            val dayDir = s"$stateBase/day=${dayDirName(day)}"
-            latestVersionBelow(dayDir, id).map(v => s"$dayDir/v$v")
-          }
-          val prev =
-            if (prevDirs.isEmpty) partial.toDF().limit(0)
-            else ss.read.parquet(prevDirs: _*)
-              .select(col("day"), col("event_type"), col("s"), col("n"))
-          val merged = partial.toDF().unionByName(prev)
-            .groupBy(col("day"), col("event_type"))
-            .agg(sum(col("s")).cast(DecimalType(28, 2)).as("s"),
-              sum(col("n")).as("n"))
-          // one job writes all touched days (day duplicated into the
-          // routing column so the files keep it); the per-day moves
-          // publish them into each day's chain (deterministic per id →
-          // replay simply rewrites v<id>)
-          val scratch = s"$stateBase/.batch_b$id"
-          // cluster by day first so each touched partition is written by
-          // one task as one file (the dynamic-partition-write discipline;
-          // unclustered, every shuffle partition opens every day dir)
-          merged.repartition(col("day")).withColumn("day_p", col("day"))
-            .write.partitionBy("day_p").mode("overwrite").parquet(scratch)
-          touched.foreach { day =>
-            val from = Paths.get(scratch, s"day_p=${dayDirName(day)}")
-            val to = Paths.get(stateBase, s"day=${dayDirName(day)}", s"v$id")
-            deleteRecursively(to)
-            Files.createDirectories(to.getParent)
-            Files.move(from, to)
-          }
-          deleteRecursively(Paths.get(scratch))
-        }
-      } finally partial.unpersist()
-    }
-    val query = src.writeStream
-      .foreachBatch(mergeBatch)
-      .option("checkpointLocation", cp)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    // current MV = per day, the newest committed version of that day
-    val stateDir = Paths.get(stateBase)
-    val dayDirs: Seq[String] =
-      if (!Files.isDirectory(stateDir)) Seq.empty
-      else {
-        val stream = Files.list(stateDir)
-        try {
-          import scala.jdk.CollectionConverters._
-          stream.iterator().asScala.map(_.getFileName.toString)
-            .filter(_.startsWith("day=")).toSeq
-        } finally stream.close()
-      }
-    if (dayDirs.isEmpty)
-      throw new IllegalStateException(s"no MV state under $stateBase")
-    val headDirs = dayDirs.map { dn =>
-      val v = latestVersionBelow(s"$stateBase/$dn", Long.MaxValue)
-        .getOrElse(throw new IllegalStateException(s"no version under $stateBase/$dn"))
-      s"$stateBase/$dn/v$v"
-    }
-    s.read.parquet(headDirs: _*)
-      .select(col("event_type"), col("day"),
+    StateChain.run(s, "graft_stream_mv", src, Some("day")) { (prev, batch) =>
+      // the partial aggregate folds the per-row (s, 1) map-side; the
+      // stored `s` is pinned to DECIMAL(28,2), since sum widens it and
+      // would drift the state schema from version to version
+      val rows = batch.select(col("day"), col("event_type"),
+        col("value").cast(DecimalType(18, 2)).cast(DecimalType(28, 2)).as("s"),
+        lit(1L).as("n"))
+      prev.fold(rows)(_.unionByName(rows))
+        .groupBy(col("day"), col("event_type"))
+        .agg(sum(col("s")).cast(DecimalType(28, 2)).as("s"), sum(col("n")).as("n"))
+    }.select(col("event_type"), col("day"),
         col("n").cast(LongType).as("n_rows"),
         col("s").cast(DoubleType).as("total_value"))
       .orderBy(asc_nulls_first("day"), asc_nulls_first("event_type"))
   }
 
-  private def deleteRecursively(p: Path): Unit =
-    graft.util.TempDirs.deleteRecursively(p)
-
   /** Continuous SCD2 maintenance — the streaming counterpart of
     * `sink_scd2_apply`, closing the pairing the MV ops have
     * (`sink_mv_incremental_refresh` ↔ [[streamMvMaintenance]]): the
-    * historized dimension lives as a BUCKET-chained state table
+    * historized dimension is a [[StateChain]] partitioned by bucket
     * (`state/bucket=<user_id % 16>/v<batchId>/`, NULL keys in the `-1`
     * chain), and each micro-batch rewrites ONLY the buckets it touches.
     * Within a touched bucket, keys absent from the batch pass through;
@@ -908,108 +763,158 @@ object StreamingOps {
     * batch rows — which makes the result correct under ANY batch split,
     * including late rows that land between already-closed intervals (the
     * one case the batch sibling's after-the-cutoff contract excludes).
-    * Work per batch ∝ touched buckets + touched keys' history; replay is
-    * idempotent (versions strictly below the batch id, deterministic
-    * rewrite — the [[mvMaintainedState]] discipline). The oracle is the
-    * full-history SCD2 window SQL, so the hash gate proves continuous
-    * maintenance ≡ complete rebuild; StreamingSpec pins the multi-batch
-    * replay against the single-batch result. At 100 TB the bucket count
-    * is the knob you raise with dimension size — rewrite granularity is
-    * bucket-level, exactly like any bucketed lakehouse dimension.
+    * Work per batch ∝ touched buckets + touched keys' history. The oracle
+    * is the full-history SCD2 window SQL, so the hash gate proves
+    * continuous maintenance ≡ complete rebuild; StreamingSpec pins the
+    * multi-batch replay against the single-batch result. At 100 TB the
+    * bucket count is the knob you raise with dimension size — rewrite
+    * granularity is bucket-level, exactly like any bucketed lakehouse
+    * dimension.
     */
   private val Scd2Buckets = 16
 
   private[streaming] def scd2MaintainedState(s: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val base = graft.util.TempDirs.create("graft_stream_scd2").toString
-    val cp = s"$base/checkpoint"
-    val stateBase = s"$base/state"
-    val stateCols = Seq(col("user_id"), col("event_id"), col("value"),
-      col("valid_from_us"), col("valid_to_us"), col("is_current"), col("bucket"))
-    def scd2(rows: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_us"), col("event_id"))
-      rows
-        .withColumn("valid_from_us", col("ts_us"))
-        .withColumn("valid_to_us", lead(col("ts_us"), 1).over(w))
-        .withColumn("is_current", col("valid_to_us").isNull)
-        .select(stateCols: _*)
-    }
     val src = streamedEvents(s, d, maxFilesPerTrigger)
       .select(col("user_id"), col("event_id"), col("value"),
-        expr("ts div 1000").as("ts_us"))
-    val mergeBatch: (DataFrame, Long) => Unit = (batch, id) => {
-      val ss = batch.sparkSession
-      val rows = batch
-        .withColumn("bucket",
-          coalesce(pmod(col("user_id"), lit(Scd2Buckets.toLong)), lit(-1L)))
-        .persist()
-      try {
-        val touched = rows.select(col("bucket")).distinct()
-          .collect().map(_.getLong(0)).toSeq
-        if (touched.nonEmpty) {
-          val prevDirs = touched.flatMap { b =>
-            latestVersionBelow(s"$stateBase/bucket=$b", id)
-              .map(v => s"$stateBase/bucket=$b/v$v")
-          }
-          val prev =
-            if (prevDirs.isEmpty) scd2(rows).limit(0)
-            else ss.read.parquet(prevDirs: _*).select(stateCols: _*)
-          val batchKeys = rows.select(col("user_id").as("t_user_id")).distinct()
-          val passThrough = prev.join(batchKeys,
-            col("user_id") <=> col("t_user_id"), "left_anti")
-          // touched keys rebuild from FULL history ∪ batch: correct under
-          // any split, late rows included
-          val hist = prev.join(batchKeys,
-              col("user_id") <=> col("t_user_id"), "left_semi")
-            .select(col("user_id"), col("event_id"), col("value"),
-              col("valid_from_us").as("ts_us"), col("bucket"))
-            .unionByName(rows.select(col("user_id"), col("event_id"),
-              col("value"), col("ts_us"), col("bucket")))
-          val newState = passThrough.unionByName(scd2(hist))
-          val scratch = s"$stateBase/.batch_b$id"
-          newState.repartition(col("bucket"))
-            .withColumn("bucket_p", col("bucket"))
-            .write.partitionBy("bucket_p").mode("overwrite").parquet(scratch)
-          touched.foreach { b =>
-            val from = Paths.get(scratch, s"bucket_p=$b")
-            val to = Paths.get(stateBase, s"bucket=$b", s"v$id")
-            deleteRecursively(to)
-            Files.createDirectories(to.getParent)
-            if (Files.exists(from)) Files.move(from, to)
-            else Files.createDirectories(to) // bucket emptied: commit empty
-          }
-          deleteRecursively(Paths.get(scratch))
-        }
-      } finally rows.unpersist()
-    }
-    val query = src.writeStream
-      .foreachBatch(mergeBatch)
-      .option("checkpointLocation", cp)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    val stateDir = Paths.get(stateBase)
-    val bucketDirs: Seq[String] =
-      if (!Files.isDirectory(stateDir)) Seq.empty
-      else {
-        val stream = Files.list(stateDir)
-        try {
-          import scala.jdk.CollectionConverters._
-          stream.iterator().asScala.map(_.getFileName.toString)
-            .filter(_.startsWith("bucket=")).toSeq
-        } finally stream.close()
-      }
-    if (bucketDirs.isEmpty)
-      throw new IllegalStateException(s"no SCD2 state under $stateBase")
-    val headDirs = bucketDirs.flatMap { bn =>
-      latestVersionBelow(s"$stateBase/$bn", Long.MaxValue)
-        .map(v => s"$stateBase/$bn/v$v")
-    }
-    s.read.parquet(headDirs: _*)
-      .select(col("user_id"), col("event_id"), col("value"),
+        expr("ts div 1000").as("ts_us"),
+        coalesce(pmod(col("user_id"), lit(Scd2Buckets.toLong)), lit(-1L)).as("bucket"))
+    StateChain.run(s, "graft_stream_scd2", src, Some("bucket")) {
+      case (None, batch) => Upsert.scd2Intervals(batch, "bucket")
+      case (Some(prev), batch) =>
+        val batchKeys = batch.select(col("user_id").as("t_user_id")).distinct()
+        val onKey = col("user_id") <=> col("t_user_id")
+        // touched keys rebuild from FULL history ∪ batch: correct under
+        // any split, late rows included
+        val hist = prev.join(batchKeys, onKey, "left_semi")
+          .select(col("user_id"), col("event_id"), col("value"),
+            col("valid_from_us").as("ts_us"), col("bucket"))
+          .unionByName(batch)
+        prev.join(batchKeys, onKey, "left_anti")
+          .unionByName(Upsert.scd2Intervals(hist, "bucket"))
+    }.select(col("user_id"), col("event_id"), col("value"),
         col("valid_from_us"), col("valid_to_us"), col("is_current"))
       .orderBy(asc_nulls_first("user_id"), asc("valid_from_us"), asc("event_id"))
+  }
+
+  /** Durable keyed state maintained by a `foreachBatch` stream, one
+    * version per micro-batch: `state/v<id>/` for an unpartitioned chain,
+    * `state/<p>=<value>/v<id>/` per partition of a chain partitioned on
+    * column `p`. Batch `id` reads the newest version strictly below `id`
+    * of each partition it touches (one multi-path scan), merges itself
+    * in, and publishes the result as `v<id>` of exactly those partitions;
+    * untouched partitions pass through by reference. Versions are found
+    * by listing the state directory, never held in a driver variable, so
+    * a restart from checkpoint that replays batch `id` re-reads the same
+    * prior state and rewrites the same version: idempotent replay, which
+    * makes at-least-once delivery exactly-once in effect (Structured
+    * Streaming, SIGMOD 2018). A crashed attempt's scratch directory and
+    * partial `v<id>` are never read.
+    *
+    * `merge(prev, batch)` gets the touched partitions' prior state
+    * (`None` before their first version) and returns their new state,
+    * with rows in every partition the batch touches.
+    */
+  private[streaming] final class StateChain(base: Path, partition: Option[String],
+      merge: (Option[DataFrame], DataFrame) => DataFrame) {
+    private val state = base.resolve("state")
+
+    /** Merge micro-batch `id` into the state and publish it as `v<id>`. */
+    def applyBatch(batch: DataFrame, id: Long): Unit = partition match {
+      case None => publish(merge(newestBelow(Seq(state), id, batch.sparkSession), batch), id)
+      case Some(p) =>
+        // read twice: for the touched partitions, then by the merge
+        val rows = batch.persist()
+        try {
+          val touched = rows.select(col(p)).distinct().collect().toSeq.map { r =>
+            val v = if (r.isNullAt(0)) null else r.get(0).toString
+            state.resolve(ExternalCatalogUtils.getPartitionPathString(p, v))
+          }
+          if (touched.nonEmpty)
+            publish(merge(newestBelow(touched, id, rows.sparkSession), rows), id)
+        } finally rows.unpersist()
+    }
+
+    /** Write `df` as version `id`: one scratch write, then one atomic
+      * directory move per partition into its `v<id>`. The scratch is
+      * rewritten whole and a stale `v<id>` is replaced, so a replay
+      * leaves exactly what a clean run does.
+      */
+    def publish(df: DataFrame, id: Long): Unit = {
+      val scratch = state.resolve(s".batch_b$id")
+      partition match {
+        case None =>
+          df.write.mode("overwrite").parquet(scratch.toString)
+          moveTo(scratch, state, id)
+        case Some(p) =>
+          // clustered by partition, each is written by one task as one
+          // file; the routing copy `<p>_p` keeps `p` in the data files
+          val routing = s"${p}_p"
+          df.repartition(col(p)).withColumn(routing, col(p))
+            .write.partitionBy(routing).mode("overwrite").parquet(scratch.toString)
+          children(scratch).filter(_.startsWith(s"$routing=")).foreach { n =>
+            moveTo(scratch.resolve(n), state.resolve(p + n.drop(routing.length)), id)
+          }
+          TempDirs.deleteRecursively(scratch)
+      }
+    }
+
+    /** Run `src` to completion, one [[applyBatch]] per micro-batch. */
+    def drive(src: DataFrame): Unit = {
+      val each: (DataFrame, Long) => Unit = applyBatch
+      src.writeStream
+        .foreachBatch(each)
+        .option("checkpointLocation", base.resolve("checkpoint").toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+
+    /** The current state: the newest version of every partition. */
+    def head(s: SparkSession): DataFrame = {
+      val dirs = partition.fold(Seq(state))(p =>
+        children(state).filter(_.startsWith(s"$p=")).map(state.resolve))
+      newestBelow(dirs, Long.MaxValue, s)
+        .getOrElse(throw new IllegalStateException(s"no state under $state"))
+    }
+
+    /** One scan over each dir's newest version strictly below `id`. */
+    private def newestBelow(dirs: Seq[Path], id: Long, s: SparkSession): Option[DataFrame] = {
+      val paths = dirs.flatMap { dir =>
+        children(dir).collect { case n if n.startsWith("v") => n.drop(1).toLong }
+          .filter(_ < id).maxOption.map(v => dir.resolve(s"v$v").toString)
+      }
+      if (paths.isEmpty) None else Some(s.read.parquet(paths: _*))
+    }
+
+    private def moveTo(from: Path, dir: Path, id: Long): Unit = {
+      val to = dir.resolve(s"v$id")
+      TempDirs.deleteRecursively(to)
+      Files.createDirectories(dir)
+      Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
+    }
+
+    private def children(dir: Path): Seq[String] =
+      if (!Files.isDirectory(dir)) Nil
+      else {
+        val stream = Files.list(dir)
+        try stream.iterator().asScala.map(_.getFileName.toString).toList
+        finally stream.close()
+      }
+  }
+
+  private[streaming] object StateChain {
+    /** Drive `src` through a new chain in a temp dir, from `seed`
+      * (version -1, below every batch) when given; returns the final state.
+      */
+    def run(s: SparkSession, prefix: String, src: DataFrame,
+        partition: Option[String] = None, seed: Option[DataFrame] = None)(
+        merge: (Option[DataFrame], DataFrame) => DataFrame): DataFrame = {
+      val chain = new StateChain(TempDirs.create(prefix), partition, merge)
+      seed.foreach(chain.publish(_, -1L))
+      chain.drive(src)
+      chain.head(s)
+    }
   }
 
   val streamScd2Apply: Q = Q(

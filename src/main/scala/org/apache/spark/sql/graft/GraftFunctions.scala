@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 import graft.functions.{BigramCounts, CosineSimilarity, FirstBandMatch, LshBucket, SigMatchCount, Simhash60}
@@ -35,11 +36,15 @@ object GraftFunctions {
     ("graft_bloom_contains", classOf[BloomFilterMightContain],
       e => BloomFilterMightContain(e(0), e(1))))
 
-  /** Idempotently register the graft native expressions. */
+  /** Register the graft native expressions, skipping each name already
+    * bound to its native class, so repeat calls change (and log) nothing.
+    */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    natives.foreach { case (name, _, build) =>
-      reg.createOrReplaceTempFunction(name, build, "built-in")
+    natives.foreach { case (name, cls, build) =>
+      val id = FunctionIdentifier(name)
+      if (!reg.lookupFunction(id).exists(_.getClassName == cls.getName))
+        reg.registerFunction(id, new ExpressionInfo(cls.getName, name), build)
     }
   }
 }
