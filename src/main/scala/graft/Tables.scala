@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit, unix_micros}
+import org.apache.spark.sql.graft.TempViews
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 import graft.util.Memo
@@ -123,9 +124,11 @@ object Tables {
     }
   }
 
-  /** Register every corpus table as a temp view, for spark.sql operators. */
+  /** Register every corpus table as a temp view, for spark.sql operators.
+    * A view that already holds the table's memoized scan is left as it is.
+    */
   def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => read(spark, sfDir, n).createOrReplaceTempView(n))
+    all.foreach(n => TempViews.bind(n, read(spark, sfDir, n)))
 
   /** Register as temp views only the corpus tables `sqlText` names, by a
     * case-insensitive whole-word match: a query reads what it names and no
@@ -134,5 +137,5 @@ object Tables {
     */
   def registerNamed(spark: SparkSession, sfDir: String, sqlText: String): Unit =
     all.filter(n => s"(?i)\\b$n\\b".r.findFirstIn(sqlText).isDefined)
-      .foreach(n => read(spark, sfDir, n).createOrReplaceTempView(n))
+      .foreach(n => TempViews.bind(n, read(spark, sfDir, n)))
 }

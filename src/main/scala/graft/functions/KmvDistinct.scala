@@ -3,6 +3,22 @@ package graft.functions
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
+/** Shared zero/reduce/merge over the [[KmvBuf]] primitives — the two
+  * concrete sketches differ ONLY in what they finish to, so the sentinel
+  * rule and the merge law live in exactly one place.
+  */
+abstract class KmvAgg[OUT](k: Int) extends Aggregator[Long, KmvBuf, OUT] {
+  final override def zero: KmvBuf = KmvBuf(Array.emptyLongArray)
+
+  final override def reduce(b: KmvBuf, h: Long): KmvBuf =
+    if (h < 0L) b else KmvBuf(KmvBuf.insert(b.hs, h, k))
+
+  final override def merge(a: KmvBuf, b: KmvBuf): KmvBuf =
+    KmvBuf(KmvBuf.mergeSorted(a.hs, b.hs, k))
+
+  final override def bufferEncoder: Encoder[KmvBuf] = Encoders.product[KmvBuf]
+}
+
 /** KMV (k-minimum-values) distinct-count sketch — the PORTABLE
   * approximate-distinct: unlike HLL (whose register layout and hash are
   * engine-specific, so `agg_approx_distinct` can only be rows-checked),
@@ -39,22 +55,6 @@ import org.apache.spark.sql.expressions.Aggregator
   * the grouped k=64 sketch accepts — and `KmvSketchProps` proves the
   * sentinel, exactness, and merge laws for all k.
   */
-/** Shared zero/reduce/merge over the [[KmvBuf]] primitives — the two
-  * concrete sketches differ ONLY in what they finish to, so the sentinel
-  * rule and the merge law live in exactly one place.
-  */
-abstract class KmvAgg[OUT](k: Int) extends Aggregator[Long, KmvBuf, OUT] {
-  final override def zero: KmvBuf = KmvBuf(Array.emptyLongArray)
-
-  final override def reduce(b: KmvBuf, h: Long): KmvBuf =
-    if (h < 0L) b else KmvBuf(KmvBuf.insert(b.hs, h, k))
-
-  final override def merge(a: KmvBuf, b: KmvBuf): KmvBuf =
-    KmvBuf(KmvBuf.mergeSorted(a.hs, b.hs, k))
-
-  final override def bufferEncoder: Encoder[KmvBuf] = Encoders.product[KmvBuf]
-}
-
 class KmvSketch(k: Int) extends KmvAgg[Long](k) {
   override def finish(b: KmvBuf): Long = KmvBuf.estimate(b.hs, k)
   override def outputEncoder: Encoder[Long] = Encoders.scalaLong

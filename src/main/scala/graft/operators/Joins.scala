@@ -113,15 +113,6 @@ object Joins {
             FROM nation a JOIN nation b ON a.n_nationkey < b.n_nationkey
             ORDER BY ka NULLS FIRST, kb NULLS FIRST"""))
 
-  /** As-of join (backward): each click matched to the latest prior-or-equal
-    * signup of the same user. No native Spark asof → union-tag + one
-    * key-partitioned window with `last(_, ignoreNulls=true)`. Signups are
-    * pre-deduped to max event_id per (user, ts) so the inclusive tie is
-    * deterministic (matches the oracle's ASOF + tiebreak contract).
-    * Timestamps are µs (`ts div 1000` ↔ DuckDB `epoch_us`) — DuckDB 1.0's
-    * parquet reader truncates nano timestamps to µs, so µs is the highest
-    * cross-engine-exact resolution.
-    */
   /** Shared backward-as-of engine: merge-tagged union + one user-keyed
     * LOCF window, returning each click with its latest signup at-or-before
     * (pre-presentation; consumers add tolerance/null-out/sort).
@@ -155,6 +146,15 @@ object Joins {
         col("last_signup_ts").as("signup_ts"), col("last_signup_id").as("signup_id"))
   }
 
+  /** As-of join (backward): each click matched to the latest prior-or-equal
+    * signup of the same user. No native Spark asof → union-tag + one
+    * key-partitioned window with `last(_, ignoreNulls=true)`. Signups are
+    * pre-deduped to max event_id per (user, ts) so the inclusive tie is
+    * deterministic (matches the oracle's ASOF + tiebreak contract).
+    * Timestamps are µs (`ts div 1000` ↔ DuckDB `epoch_us`) — DuckDB 1.0's
+    * parquet reader truncates nano timestamps to µs, so µs is the highest
+    * cross-engine-exact resolution.
+    */
   val joinAsofBackward: Q = Q(
     "join_asof_backward",
     (s, d) => asofBackwardMatched(s, d).orderBy(asc_nulls_first("event_id")),
@@ -171,13 +171,6 @@ object Joins {
               ON c.user_id = s.user_id AND c.ts_us >= s.ts_us
             ORDER BY c.event_id NULLS FIRST"""))
 
-  /** Forward as-of join — the mirror of `join_asof_backward`: each click
-    * matched to the NEXT signup of the same user at or after the click
-    * (ts_us >= click ts). Same scale-safe union-tag shape: one user-keyed
-    * window, `first(ignoreNulls)` over the FORWARD frame (current row →
-    * unbounded following); clicks sort before same-timestamp signups so
-    * equality matches, mirroring DuckDB's `ASOF ... c.ts <= s.ts`.
-    */
   /** Bounded-staleness as-of join — the feature-store form of
     * [[joinAsofBackward]]: a click takes its user's latest signup only
     * if that signup is at most 1 h stale; older matches null out while
@@ -215,6 +208,13 @@ object Joins {
               ON c.user_id = s.user_id AND c.ts_us >= s.ts_us
             ORDER BY c.event_id NULLS FIRST"""))
 
+  /** Forward as-of join — the mirror of `join_asof_backward`: each click
+    * matched to the NEXT signup of the same user at or after the click
+    * (ts_us >= click ts). Same scale-safe union-tag shape: one user-keyed
+    * window, `first(ignoreNulls)` over the FORWARD frame (current row →
+    * unbounded following); clicks sort before same-timestamp signups so
+    * equality matches, mirroring DuckDB's `ASOF ... c.ts <= s.ts`.
+    */
   val joinAsofForward: Q = Q(
     "join_asof_forward",
     (s, d) => {
@@ -458,20 +458,6 @@ object Joins {
             FROM orders JOIN customer ON o_custkey = c_custkey
             GROUP BY c_mktsegment ORDER BY c_mktsegment NULLS FIRST"""))
 
-  /** Runtime bloom-join pruning — the runtime-filter sibling of
-    * `op_dpp_star_join` (that one prunes PARTITIONS via a dynamic
-    * subquery; this prunes ROWS where the layout gives no partition to
-    * prune): the filtered dim side's join keys fold into an O(KB) bloom
-    * sketch (Spark's own BloomFilterAggregate, surfaced as
-    * `graft_bloom_agg` — the machinery behind Catalyst's
-    * InjectRuntimeFilter), which probes the FACT SCAN as a constant
-    * pre-shuffle filter: at 100 TB the ~4/5 of fact rows whose keys
-    * cannot join die before the exchange instead of being shuffled and
-    * discarded by the join. False positives are harmless — the real join
-    * still runs behind the prescreen — so the result is exact and fully
-    * oracled; [[PlanSpec]] pins the filter's pre-join placement and the
-    * measured row reduction vs the unpruned control.
-    */
   /** (bloom-prescreened fact, filtered dim) — the spec seam: [[PlanSpec]]
     * measures the pre-shuffle row reduction and pins the filter placement.
     */
@@ -499,6 +485,20 @@ object Joins {
     (fact, dim)
   }
 
+  /** Runtime bloom-join pruning — the runtime-filter sibling of
+    * `op_dpp_star_join` (that one prunes PARTITIONS via a dynamic
+    * subquery; this prunes ROWS where the layout gives no partition to
+    * prune): the filtered dim side's join keys fold into an O(KB) bloom
+    * sketch (Spark's own BloomFilterAggregate, surfaced as
+    * `graft_bloom_agg` — the machinery behind Catalyst's
+    * InjectRuntimeFilter), which probes the FACT SCAN as a constant
+    * pre-shuffle filter: at 100 TB the ~4/5 of fact rows whose keys
+    * cannot join die before the exchange instead of being shuffled and
+    * discarded by the join. False positives are harmless — the real join
+    * still runs behind the prescreen — so the result is exact and fully
+    * oracled; [[PlanSpec]] pins the filter's pre-join placement and the
+    * measured row reduction vs the unpruned control.
+    */
   val joinBloomPrescreen: Q = Q(
     "join_bloom_prescreen",
     (s, d) => {

@@ -707,17 +707,6 @@ object LlmOps {
       """ SELECT id1, id2, hamming FROM pairs
           ORDER BY id1 NULLS FIRST, id2 NULLS FIRST"""))
 
-  /** Unsorted simhash Hamming≤`maxHamming` pair engine — shared by the
-    * registered op (which adds the presentation sort) and the
-    * cluster-resolution op (which treats the pairs as an edge list, where
-    * a sort is wasted work). The 4×16-bit chunk banding is COMPLETE for
-    * Hamming ≤ 3 (pigeonhole: ≤3 flipped bits cannot touch all 4
-    * chunks); radii 4–5 are recall-approximate through the same chunk
-    * join (a pair differing in all four chunks is never a candidate) —
-    * acceptable for consumers that only need a denser candidate graph
-    * (link prediction), NOT for the dedup ops, which stay at the
-    * complete ≤3 default.
-    */
   /** Cached entry point: SIX registry ops consume the pair table
     * (simhash dedup, cluster resolution, the four graph ops), and each
     * recomputing the corpus-scan + hashing subtree is exactly the
@@ -732,6 +721,17 @@ object LlmOps {
       computeSimhashPairs(s, d, maxHamming).cache()
     }
 
+  /** Unsorted simhash Hamming≤`maxHamming` pair engine — shared by the
+    * registered op (which adds the presentation sort) and the
+    * cluster-resolution op (which treats the pairs as an edge list, where
+    * a sort is wasted work). The 4×16-bit chunk banding is COMPLETE for
+    * Hamming ≤ 3 (pigeonhole: ≤3 flipped bits cannot touch all 4
+    * chunks); radii 4–5 are recall-approximate through the same chunk
+    * join (a pair differing in all four chunks is never a candidate) —
+    * acceptable for consumers that only need a denser candidate graph
+    * (link prediction), NOT for the dedup ops, which stay at the
+    * complete ≤3 default.
+    */
   private def computeSimhashPairs(s: SparkSession, d: String,
                                   maxHamming: Int): DataFrame = {
     val sims = simhashes(s, d)
@@ -2343,22 +2343,6 @@ object LlmOps {
             FROM documents GROUP BY lang, source
             ORDER BY lang NULLS FIRST, source NULLS FIRST"""))
 
-  /** Winnowing fingerprints (Schleimer–Wilkerson–Aiken, SIGMOD'03 — the
-    * MOSS algorithm): per document, hash every 3-token shingle, then
-    * keep the MINIMUM hash of each sliding window of 4 consecutive
-    * shingles, deduplicated — a fingerprint set with guaranteed
-    * position coverage (any match of ≥ 6 tokens shares a fingerprint)
-    * at ~2/(w+1) the density of full shingling, which is what makes
-    * substring-level dedup affordable at corpus scale. Determinism
-    * across engines: hash and position are PACKED into one integer
-    * (`h·2³¹ + pos`, exact in int64: h < 2³², pos < 2³¹ — any document
-    * whose token positions fit an int, i.e. every real document) so the
-    * window `min` resolves hash ties to the leftmost position
-    * identically everywhere — no arg_min tie ambiguity; the hash is the
-    * portable md5-derived 32-bit. Shape: one map-side shingle explode,
-    * ONE doc-keyed window (the ts_sessionize shuffle class), distinct.
-    * Rows per doc ≈ 2·tokens/(w+1), never quadratic.
-    */
   /** The fingerprint table itself — (doc_id, fp_hash, fp_pos), shared
     * by the registered op and [[llmWinnowDedupPairs]].
     */
@@ -2385,6 +2369,22 @@ object LlmOps {
       .distinct()
   }
 
+  /** Winnowing fingerprints (Schleimer–Wilkerson–Aiken, SIGMOD'03 — the
+    * MOSS algorithm): per document, hash every 3-token shingle, then
+    * keep the MINIMUM hash of each sliding window of 4 consecutive
+    * shingles, deduplicated — a fingerprint set with guaranteed
+    * position coverage (any match of ≥ 6 tokens shares a fingerprint)
+    * at ~2/(w+1) the density of full shingling, which is what makes
+    * substring-level dedup affordable at corpus scale. Determinism
+    * across engines: hash and position are PACKED into one integer
+    * (`h·2³¹ + pos`, exact in int64: h < 2³², pos < 2³¹ — any document
+    * whose token positions fit an int, i.e. every real document) so the
+    * window `min` resolves hash ties to the leftmost position
+    * identically everywhere — no arg_min tie ambiguity; the hash is the
+    * portable md5-derived 32-bit. Shape: one map-side shingle explode,
+    * ONE doc-keyed window (the ts_sessionize shuffle class), distinct.
+    * Rows per doc ≈ 2·tokens/(w+1), never quadratic.
+    */
   val llmWinnowFingerprint: Q = Q(
     "llm_winnow_fingerprint",
     (s, d) =>
@@ -2518,14 +2518,6 @@ object LlmOps {
             FROM terms GROUP BY source
             ORDER BY source NULLS FIRST"""))
 
-  /** Per-document quality scoring: token count, type-token ratio, stopword
-    * ratio, average token length, combined score — pure integer counts +
-    * per-row double arithmetic, identical expression tree on both engines.
-    */
-  /** Per-doc quality metrics + combined score, carrying `lang` — shared by
-    * the score op and the per-lang quantile filter ([[graft.operators
-    * .PipelineOps.llmQualityQuantile]]).
-    */
   /** The DATASET REPORT CARD — the per-(lang, source) summary a corpus
     * release ships (HF dataset card / Dolma-style data sheet): document
     * and token counts, mean document length, mean quality, and the
@@ -2632,6 +2624,10 @@ object LlmOps {
             FROM toks t LEFT JOIN vocab v ON t.tok = v.tok
             GROUP BY t.lang ORDER BY t.lang NULLS FIRST"""))
 
+  /** Per-doc quality metrics + combined score, carrying `lang` — shared by
+    * the score op and the per-lang quantile filter ([[graft.operators
+    * .PipelineOps.llmQualityQuantile]]).
+    */
   private[operators] def qualityScored(s: SparkSession, d: String): DataFrame =
     qualityScored(Tables.read(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("text"), col("n_chars")))
@@ -2688,6 +2684,10 @@ object LlmOps {
                      / len(string_split(text, ' ')) AS ttr
             FROM documents ORDER BY doc_id NULLS FIRST"""))
 
+  /** Per-document quality scoring: token count, type-token ratio, stopword
+    * ratio, average token length, combined score — pure integer counts +
+    * per-row double arithmetic, identical expression tree on both engines.
+    */
   val llmQualityScore: Q = Q(
     "llm_quality_score",
     (s, d) =>
@@ -2731,15 +2731,6 @@ object LlmOps {
                    CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0)) AS BIGINT) AS n_bpe_tokens
             FROM documents ORDER BY doc_id NULLS FIRST"""))
 
-  /** n-gram-profile language ID (two-pass heuristic): build a top-20
-    * character-bigram profile per language from the corpus itself
-    * (explode + agg + per-lang top-k window — distributed, scales with the
-    * corpus), then COLLECT the profile — it is 5 langs × 20 bigrams
-    * regardless of corpus size — and classify each document in one
-    * codegen'd scoring pass ([[scoreByProfile]]): the profile folds into
-    * ~100 `contains` terms, no UDF anywhere. Not SQL-expressible as one
-    * deterministic query → rows-only check + spec.
-    */
   /** Multinomial Naive Bayes language classifier, TRAINED on the corpus
     * and EVALUATED on a held-out split — the supervised companion to the
     * profile-based [[llmLangIdNgram]] (and the standard fastText-class
@@ -3463,10 +3454,6 @@ object LlmOps {
         FROM r WHERE rk <= 40
         ORDER BY lang NULLS FIRST, rk""")
 
-  /** Deterministic train/val/test split assignment (90/5/5 by scramble
-    * bucket) — one scan, zero shuffles, reproducible across runs and
-    * engines; the standard holdout step every dataset build ends with.
-    */
   /** ONE definition of the 90/5/5 split law for BOTH engines — shared
     * by `llm_train_split` and `llm_split_leakage_audit` so a ratio or
     * scramble change cannot silently desynchronize the audit from the
@@ -3481,6 +3468,10 @@ object LlmOps {
              WHEN ($scrambleSql) % 100 < 95 THEN 'val'
              ELSE 'test' END"""
 
+  /** Deterministic train/val/test split assignment (90/5/5 by scramble
+    * bucket) — one scan, zero shuffles, reproducible across runs and
+    * engines; the standard holdout step every dataset build ends with.
+    */
   val llmTrainSplit: Q = Q(
     "llm_train_split",
     (s, d) =>

@@ -799,6 +799,13 @@ object PipelineOps {
                      AS n_redactions
             FROM events ORDER BY event_id NULLS FIRST"""))
 
+  /** The normalization expression itself — shared with Round18Spec so
+    * the idempotence pin exercises the REAL op expression, not a copy.
+    */
+  private[operators] def normalizeText(c: Column): Column =
+    lower(trim(regexp_replace(
+      regexp_replace(c, "[^a-zA-Z0-9 ]", " "), " +", " ")))
+
   /** Text normalization — the canonical-form stage every dedup/quality
     * pipeline runs BEFORE digesting (casefold, strip punctuation,
     * collapse whitespace): without it trivial formatting variants defeat
@@ -814,13 +821,6 @@ object PipelineOps {
     * character classes themselves (`[^a-zA-Z0-9 ]`, `' +'`) read
     * identically under Java regex and RE2.
     */
-  /** The normalization expression itself — shared with Round18Spec so
-    * the idempotence pin exercises the REAL op expression, not a copy.
-    */
-  private[operators] def normalizeText(c: Column): Column =
-    lower(trim(regexp_replace(
-      regexp_replace(c, "[^a-zA-Z0-9 ]", " "), " +", " ")))
-
   val llmTextNormalize: Q = Q(
     "llm_text_normalize",
     (s, d) =>
@@ -1963,14 +1963,6 @@ object PipelineOps {
             FROM h GROUP BY user_id, island
             ORDER BY user_id NULLS FIRST, iv_start"""))
 
-  /** Day-over-day retention — the sibling of `ts_daily_active_users`:
-    * per day, how many active users were also active the PREVIOUS day,
-    * and the resulting retention rate. The distinct (user, day) set is
-    * built once and self-joined with the day shifted by one — an
-    * equi-join on (user_id, day), so at fact scale it is one hash
-    * shuffle of the deduplicated activity set, never of raw events;
-    * day-1 (no predecessor) reports 0 returning by construction.
-    */
   /** Longest consecutive-day active streak per user — the engagement
     * metric next to retention/DAU, and the canonical gaps-and-islands
     * window idiom: over the DISTINCT (user, day) table (aggregate-first
@@ -2057,6 +2049,14 @@ object PipelineOps {
                    (SELECT count(*) FROM c) AS n_then_click,
                    (SELECT count(*) FROM p) AS n_then_purchase"""))
 
+  /** Day-over-day retention — the sibling of `ts_daily_active_users`:
+    * per day, how many active users were also active the PREVIOUS day,
+    * and the resulting retention rate. The distinct (user, day) set is
+    * built once and self-joined with the day shifted by one — an
+    * equi-join on (user_id, day), so at fact scale it is one hash
+    * shuffle of the deduplicated activity set, never of raw events;
+    * day-1 (no predecessor) reports 0 returning by construction.
+    */
   val tsDailyRetention: Q = Q(
     "ts_daily_retention",
     (s, d) => {
@@ -2424,20 +2424,6 @@ object PipelineOps {
             FROM t2 LEFT JOIN seas s USING (weekday)
             ORDER BY day NULLS FIRST"""))
 
-  /** Seasonality-aware anomaly gate — the composition
-    * `ts_seasonal_decompose` exists FOR: flag days whose RESIDUAL (the
-    * series after trend and weekday seasonality are removed) exceeds 3×
-    * the mean absolute residual. A raw-value gate fires on every Monday
-    * spike; this one only fires when a day deviates from its own
-    * cycle-adjusted expectation. Cost: the decompose subtree (one corpus
-    * hash agg + O(#days) windows) + one O(#days) aggregate and a
-    * broadcast of the single threshold row. Determinism: residuals are
-    * already rounded 6-dp doubles; the mean-|residual| accumulates in
-    * DECIMAL(28,6) (merge-order independent) and the threshold is one
-    * rounded double op; the flag compares the same two doubles in both
-    * engines. Oracle embeds the decompose CTE verbatim (keep in sync
-    * with `ts_seasonal_decompose`).
-    */
   /** Seasonality STRENGTH of the daily series — Hyndman's STL diagnostic
     * `F_s = max(0, 1 − Var(residual)/Var(seasonal + residual))`: ~0 means
     * the weekday cycle explains nothing (don't seasonally adjust), →1
@@ -2532,6 +2518,20 @@ object PipelineOps {
                    END AS strength
             FROM v"""))
 
+  /** Seasonality-aware anomaly gate — the composition
+    * `ts_seasonal_decompose` exists FOR: flag days whose RESIDUAL (the
+    * series after trend and weekday seasonality are removed) exceeds 3×
+    * the mean absolute residual. A raw-value gate fires on every Monday
+    * spike; this one only fires when a day deviates from its own
+    * cycle-adjusted expectation. Cost: the decompose subtree (one corpus
+    * hash agg + O(#days) windows) + one O(#days) aggregate and a
+    * broadcast of the single threshold row. Determinism: residuals are
+    * already rounded 6-dp doubles; the mean-|residual| accumulates in
+    * DECIMAL(28,6) (merge-order independent) and the threshold is one
+    * rounded double op; the flag compares the same two doubles in both
+    * engines. Oracle embeds the decompose CTE verbatim (keep in sync
+    * with `ts_seasonal_decompose`).
+    */
   val tsSeasonalAnomaly: Q = Q(
     "ts_seasonal_anomaly",
     (s, d) => {
@@ -2664,18 +2664,6 @@ object PipelineOps {
                    round(trend, 6) AS trend, round(forecast, 6) AS forecast
             FROM hw ORDER BY day NULLS FIRST"""))
 
-  /** One-step-ahead forecast backtest — the evaluation half of
-    * `ts_holt_forecast` (a forecaster nobody scores is a liability):
-    * per-day absolute error of the Holt one-step forecast plus the
-    * summary MAE and sMAPE an ingestion monitor thresholds on.
-    * Cost: the Holt subtree (one corpus agg + an O(#days) fold) + one
-    * O(#days) aggregate. Determinism: observed and forecast are the
-    * op's already-rounded outputs; each error is one double subtraction
-    * rounded to 6 dp and accumulated in DECIMAL(28,6) (merge-order
-    * independent); each summary ratio is a single rounded double
-    * division. Oracle embeds the Holt recursive CTE verbatim (keep in
-    * sync with `ts_holt_forecast`).
-    */
   /** Holt-Winters ADDITIVE triple exponential smoothing
     * (α=β=γ=0.5, season length 7 by epoch weekday `day % 7`) of the
     * daily total series — the seasonal completion of the forecasting
@@ -2818,6 +2806,18 @@ object PipelineOps {
                    round(forecast, 6) AS forecast
             FROM hw ORDER BY day NULLS FIRST"""))
 
+  /** One-step-ahead forecast backtest — the evaluation half of
+    * `ts_holt_forecast` (a forecaster nobody scores is a liability):
+    * per-day absolute error of the Holt one-step forecast plus the
+    * summary MAE and sMAPE an ingestion monitor thresholds on.
+    * Cost: the Holt subtree (one corpus agg + an O(#days) fold) + one
+    * O(#days) aggregate. Determinism: observed and forecast are the
+    * op's already-rounded outputs; each error is one double subtraction
+    * rounded to 6 dp and accumulated in DECIMAL(28,6) (merge-order
+    * independent); each summary ratio is a single rounded double
+    * division. Oracle embeds the Holt recursive CTE verbatim (keep in
+    * sync with `ts_holt_forecast`).
+    */
   val tsForecastBacktest: Q = Q(
     "ts_forecast_backtest",
     (s, d) => {
@@ -3030,34 +3030,6 @@ object PipelineOps {
             SELECT a, b, cnt FROM g
             ORDER BY cnt DESC, a, b LIMIT 20"""))
 
-  /** BPE tokenizer TRAINING, three full iterations — the loop
-    * `llm_bpe_merge_step` is one step of: per iteration (1) count
-    * adjacent symbol-pair frequencies over the weighted vocab, (2) pick
-    * the argmax pair (total order: cnt DESC, pair ASC), (3) rewrite
-    * every word, merging occurrences of that pair greedy-leftmost
-    * non-overlapping (the Sennrich 2016 semantics). Output is the
-    * learned merge table — the artifact tokenizer training persists.
-    *
-    * The training loop never touches the corpus again after the ONE
-    * vocab aggregation: every iteration runs over the |vocab|
-    * distinct-word table (map-side-partial pair agg + a 1-row
-    * TakeOrderedAndProject argmax broadcast back), so a 10×-bigger
-    * corpus with the same vocabulary pays only the initial agg — the
-    * property that makes BPE trainable at 100 TB. The greedy rewrite is
-    * a portable left fold (`aggregate` HOF here, `list_reduce` in the
-    * oracle) over the space-joined symbol string: a merged symbol can
-    * never equal the pair's left element (concat(a,b) = a needs empty
-    * b), so "don't re-merge what this pass just produced" falls out of
-    * the exact-last-symbol check and both engines replay the identical
-    * greedy scan — proven on the argmax-adversarial a=b runs ("aaaa" →
-    * "aa aa"). Vocab materializes per iteration (3 rounds, bounded
-    * lineage), the corpus exactly once.
-    */
-  /** Training-loop seam shared by `llm_bpe_train_iters` and
-    * `llm_bpe_tokenize_apply`: `vocab0` must carry (tok, w = space-joined
-    * symbols, n); returns (per-step 1-row merge tables, the rewritten
-    * vocab after all merges).
-    */
   /** The greedy-leftmost non-overlapping merge as a portable left fold
     * over columns (s: array of symbols, a, b) — exposed as a seam so the
     * property test can drive it against a reference scan for arbitrary
@@ -3072,6 +3044,11 @@ object PipelineOps {
                             ' ', a, b) END
            ELSE concat(acc, ' ', x) END)""")
 
+  /** Training-loop seam shared by `llm_bpe_train_iters` and
+    * `llm_bpe_tokenize_apply`: `vocab0` must carry (tok, w = space-joined
+    * symbols, n); returns (per-step 1-row merge tables, the rewritten
+    * vocab after all merges).
+    */
   private[operators] def bpeTrainLoop(vocab0: DataFrame, iters: Int)
       : (Seq[DataFrame], DataFrame) = {
     val mergeFold = bpeMergeFold
@@ -3118,6 +3095,29 @@ object PipelineOps {
         " ").as("w"), col("n"))
       .truncated
 
+  /** BPE tokenizer TRAINING, three full iterations — the loop
+    * `llm_bpe_merge_step` is one step of: per iteration (1) count
+    * adjacent symbol-pair frequencies over the weighted vocab, (2) pick
+    * the argmax pair (total order: cnt DESC, pair ASC), (3) rewrite
+    * every word, merging occurrences of that pair greedy-leftmost
+    * non-overlapping (the Sennrich 2016 semantics). Output is the
+    * learned merge table — the artifact tokenizer training persists.
+    *
+    * The training loop never touches the corpus again after the ONE
+    * vocab aggregation: every iteration runs over the |vocab|
+    * distinct-word table (map-side-partial pair agg + a 1-row
+    * TakeOrderedAndProject argmax broadcast back), so a 10×-bigger
+    * corpus with the same vocabulary pays only the initial agg — the
+    * property that makes BPE trainable at 100 TB. The greedy rewrite is
+    * a portable left fold (`aggregate` HOF here, `list_reduce` in the
+    * oracle) over the space-joined symbol string: a merged symbol can
+    * never equal the pair's left element (concat(a,b) = a needs empty
+    * b), so "don't re-merge what this pass just produced" falls out of
+    * the exact-last-symbol check and both engines replay the identical
+    * greedy scan — proven on the argmax-adversarial a=b runs ("aaaa" →
+    * "aa aa"). Vocab materializes per iteration (3 rounds, bounded
+    * lineage), the corpus exactly once.
+    */
   val llmBpeTrainIters: Q = Q(
     "llm_bpe_train_iters",
     (s, d) => {

@@ -60,12 +60,6 @@ object SourceOps {
     Some("""SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k_val
             FROM events ORDER BY event_id NULLS FIRST"""))
 
-  /** Debezium envelope unwrap (`ExtractNewRecordState` SMT, reference
-    * `setup.sh:105-107`): build envelope JSON strings from `events` rows,
-    * then decode via the real CdcEnvelope path. Non-SQL-expressible → no
-    * oracle; unit-tested against the literal captured messages
-    * (reference `README.md:127-129`).
-    */
   /** Payload row schema + envelope-JSON synthesis shared by the unwrap op
     * and its dead-letter sibling ([[srcCdcQuarantine]]).
     */
@@ -83,6 +77,13 @@ object SourceOps {
         expr("ts div 1000").as("updated_at"))),
       lit("}"))
 
+  /** Debezium envelope unwrap (`ExtractNewRecordState` SMT, reference
+    * `setup.sh:105-107`): build envelope JSON strings from `events` rows,
+    * then decode via the real CdcEnvelope path. The oracle reads the
+    * same columns straight from `events`; the decode itself is also
+    * unit-tested against the literal captured messages (reference
+    * `README.md:127-129`).
+    */
   val srcCdcEnvelopeUnwrap: Q = Q(
     "src_cdc_envelope_unwrap",
     (s, d) => {
@@ -1275,24 +1276,6 @@ object SourceOps {
       dir
     }
 
-  /** Incremental materialized-view maintenance — the aggregate
-    * counterpart of [[sinkUpsertLatestByKey]] and the standard warehouse
-    * pattern: a per-(day, event_type) partial-aggregate MV is maintained
-    * under a CDC delta batch by REFRESHING ONLY THE TOUCHED GROUPS,
-    * never rescanning the base table. The delta is late data for the
-    * day % 5 ≡ 2 slice: inserts (+1, +v) for the snapshot's missing
-    * rows (event_id % 7 = 0, non-error) and retractions (−1, −v) for
-    * the error rows the upstream fix deletes. Mechanics, each the 100 TB
-    * shape: signed delta partials (one small agg), touched-day list
-    * (O(#days) driver state; past [[touchedDayInBudget]] the In-literal
-    * degrades to a broadcast semi-join, never a failure), PARTITION-PRUNED read of just
-    * the touched MV partitions merged full-outer with the delta
-    * (count ≤ 0 groups drop), a write of ONLY those partitions, and a
-    * Hive-style publish — untouched partitions pass through by
-    * reference, so refresh cost ∝ touched data, not MV size
-    * ([[CompactionSpec]] pins the pruned scan and the 1/5 write). The
-    * oracle proves refreshed state ≡ full recompute by construction.
-    */
   /** Soft In-literal budget for the touched-day predicate: below it a
     * static `isin` prunes MV partitions at PLAN time; above it Catalyst
     * In-lists of thousands of elements analyze/codegen slowly, so the
@@ -1356,6 +1339,24 @@ object SourceOps {
     (mv0dir, refreshDir, touched)
   }
 
+  /** Incremental materialized-view maintenance — the aggregate
+    * counterpart of [[sinkUpsertLatestByKey]] and the standard warehouse
+    * pattern: a per-(day, event_type) partial-aggregate MV is maintained
+    * under a CDC delta batch by REFRESHING ONLY THE TOUCHED GROUPS,
+    * never rescanning the base table. The delta is late data for the
+    * day % 5 ≡ 2 slice: inserts (+1, +v) for the snapshot's missing
+    * rows (event_id % 7 = 0, non-error) and retractions (−1, −v) for
+    * the error rows the upstream fix deletes. Mechanics, each the 100 TB
+    * shape: signed delta partials (one small agg), touched-day list
+    * (O(#days) driver state; past [[touchedDayInBudget]] the In-literal
+    * degrades to a broadcast semi-join, never a failure), PARTITION-PRUNED read of just
+    * the touched MV partitions merged full-outer with the delta
+    * (count ≤ 0 groups drop), a write of ONLY those partitions, and a
+    * Hive-style publish — untouched partitions pass through by
+    * reference, so refresh cost ∝ touched data, not MV size
+    * ([[CompactionSpec]] pins the pruned scan and the 1/5 write). The
+    * oracle proves refreshed state ≡ full recompute by construction.
+    */
   val sinkMvIncrementalRefresh: Q = Q(
     "sink_mv_incremental_refresh",
     (s, d) => {
@@ -1550,11 +1551,6 @@ object SourceOps {
       dir
     }
 
-  /** The fused merge: ONE range shuffle on the key, in-partition sort
-    * (key asc, version desc), then a streaming first-row-per-key pass —
-    * returns the merged dir. Factored out so [[CompactionSpec]] can pin
-    * the single-exchange plan and the disjoint per-file key ranges.
-    */
   /** The fused merge as an unexecuted frame — the seam [[CompactionSpec]]
     * plan-checks (the single-exchange property must hold on the REAL
     * pipeline, not a rebuilt lookalike).
@@ -1589,6 +1585,11 @@ object SourceOps {
     }
   }
 
+  /** The fused merge: ONE range shuffle on the key, in-partition sort
+    * (key asc, version desc), then a streaming first-row-per-key pass —
+    * returns the merged dir. Factored out so [[CompactionSpec]] can pin
+    * the single-exchange plan and the disjoint per-file key ranges.
+    */
   private[operators] def compactMergeDedup(s: SparkSession, d: String): String = {
     val outDir = graft.util.TempDirs.create("graft_merge_dedup").toString
     mergeDedupFrame(s, d).write.mode("overwrite").parquet(outDir)

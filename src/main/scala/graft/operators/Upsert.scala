@@ -22,12 +22,17 @@ import org.apache.spark.sql.graft.BatchRelation
   */
 object Upsert {
 
-  /** Keep the latest row per key: version desc, tiebreaks desc. */
+  /** Keep the latest row per key: version desc, tiebreaks desc. Analyzed
+    * once per query for micro-batches (`BatchRelation.planOnce`).
+    */
   def latestByKey(df: DataFrame, key: Seq[Column], version: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(key: _*).orderBy(version.map(_.desc): _*)
-    BatchRelation.coalesceIfOnePartition(df).withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+    val Seq(latest) = BatchRelation.planOnce(df, "latestByKey", key, version) { in =>
+      val w = Window.partitionBy(key: _*).orderBy(version.map(_.desc): _*)
+      Seq(BatchRelation.coalesceIfOnePartition(in).withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1)
+        .drop("__rn"))
+    }
+    latest
   }
 
   /** SCD type-2 validity intervals of a change stream keyed by `user_id`:

@@ -2,7 +2,8 @@ package graft.sinks
 
 import java.sql.DriverManager
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.graft.BatchRelation
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.CdcEnvelope
@@ -21,13 +22,15 @@ import graft.sources.CdcEnvelope
   * batches are applied in micro-batch order (Structured Streaming
   * guarantees this under checkpointing).
   *
-  * Scale: work happens on executors via `foreachPartition` — one
-  * connection + two prepared statements per partition, JDBC batch API,
-  * nothing on the driver. One transaction per partition of the batch:
-  * the shuffle partitions of an upstream key dedup as AQE coalesced them
-  * (a small batch's shuffle coalesces to one), or one when the batch
-  * arrives as one partition (then [[graft.operators.Upsert.latestByKey]]
-  * plans no shuffle).
+  * Scale: work happens on executors, in one write job of
+  * `BatchRelation.foreachPartition` (the `Dataset` method's closures cost
+  * the driver a class parse each per batch) — one connection + two
+  * prepared statements per partition, JDBC batch API, nothing on the
+  * driver. One transaction per partition of the batch: the shuffle
+  * partitions of an upstream key dedup as AQE coalesced them (a small
+  * batch's shuffle coalesces to one), or one when the batch arrives as one
+  * partition (then [[graft.operators.Upsert.latestByKey]] plans no
+  * shuffle).
   */
 object JdbcUpsertSink {
 
@@ -46,7 +49,8 @@ object JdbcUpsertSink {
     require(keyCols.forall(cols.contains), s"key $keyCols not in $cols")
     val delSql = dialect.deleteByKeySql(table, keyCols)
     val insSql = dialect.insertSql(table, cols)
-    batch.foreachPartition { rows: Iterator[Row] =>
+    val keyIdx = keyCols.map(cols.indexOf)
+    BatchRelation.foreachPartition(batch) { rows =>
       if (rows.hasNext) {
         val conn = DriverManager.getConnection(url)
         try {
@@ -55,14 +59,10 @@ object JdbcUpsertSink {
           val ins = conn.prepareStatement(insSql)
           rows.foreach { r =>
             del.foreach { d =>
-              keyCols.zipWithIndex.foreach { case (k, i) =>
-                d.setObject(i + 1, r.getAs[Any](k))
-              }
+              keyIdx.zipWithIndex.foreach { case (k, i) => d.setObject(i + 1, r.get(k)) }
               d.addBatch()
             }
-            cols.zipWithIndex.foreach { case (c, i) =>
-              ins.setObject(i + 1, r.getAs[Any](c))
-            }
+            cols.indices.foreach(i => ins.setObject(i + 1, r.get(i)))
             ins.addBatch()
           }
           del.foreach(_.executeBatch())

@@ -75,25 +75,32 @@ object CdcEnvelope {
     *
     * The batch is scanned and decoded once: both legs read one
     * `BatchRelation.computeOnce` relation of `(raw, env)`. `df` must be a
-    * batch DataFrame, as `foreachBatch` hands over.
+    * batch DataFrame, as `foreachBatch` hands over. The decode and the two
+    * legs are analyzed once per query (`BatchRelation.planOnce`).
     */
   def unwrapTolerant(df: DataFrame, jsonCol: Column, payload: StructType,
                      microTsCols: Seq[String] = Seq.empty)
       : (DataFrame, DataFrame) = {
-    val goodColumns = payloadColumns(payload, microTsCols)
-    val decoded = BatchRelation.computeOnce(df.filter(jsonCol.isNotNull)
-      .select(jsonCol.cast(StringType).as("raw"),
-        from_json(jsonCol, decodeSchema(payload)).as("env")))
-    val good = decoded.filter(col("env.payload").isNotNull).select(goodColumns: _*)
-    // from_json (PERMISSIVE) yields a null-fields row for malformed input,
-    // so the reason tag discriminates via try_parse_json on the (small)
-    // quarantine leg only: syntactically broken vs valid-JSON-wrong-shape.
-    val quarantine = BatchRelation.coalesceIfOnePartition(decoded
-      .filter(col("env").isNull || col("env.payload").isNull)
-      .select(col("raw"),
-        when(try_parse_json(col("raw")).isNull, lit("unparseable_json"))
-          .otherwise(lit("missing_payload")).as("error")))
-      .distinct()
+    val Seq(decode) = BatchRelation.planOnce(df, "unwrapTolerant.decode", jsonCol, payload) { in =>
+      Seq(in.filter(jsonCol.isNotNull)
+        .select(jsonCol.cast(StringType).as("raw"),
+          from_json(jsonCol, decodeSchema(payload)).as("env")))
+    }
+    val decoded = BatchRelation.computeOnce(decode)
+    val Seq(good, quarantine) =
+      BatchRelation.planOnce(decoded, "unwrapTolerant.legs", payload, microTsCols) { d =>
+        // from_json (PERMISSIVE) yields a null-fields row for malformed
+        // input, so the reason tag discriminates via try_parse_json on the
+        // (small) quarantine leg only: syntactically broken vs
+        // valid-JSON-wrong-shape.
+        Seq(d.filter(col("env.payload").isNotNull).select(payloadColumns(payload, microTsCols): _*),
+          BatchRelation.coalesceIfOnePartition(d
+            .filter(col("env").isNull || col("env.payload").isNull)
+            .select(col("raw"),
+              when(try_parse_json(col("raw")).isNull, lit("unparseable_json"))
+                .otherwise(lit("missing_payload")).as("error")))
+            .distinct())
+      }
     (good, quarantine)
   }
 }

@@ -613,8 +613,8 @@ object StreamingOps {
     * resolution cutoff applies per side — a null-signup row needs the
     * click's window resolved, a null-click row the signup's — and the
     * batch FULL JOIN oracle applies the identical two-sided predicate.
-    */
-  /** Deliberately NOT served from the family memo: the full outer IS the
+    *
+    * Deliberately NOT served from the family memo: the full outer IS the
     * family run, and keeping it a plain uncached run means the bench
     * still measures a real streaming-join execution for the family (the
     * inner/left keys are projections — serving THEM from the shared run
@@ -647,20 +647,6 @@ object StreamingOps {
                OR (c.click_id IS NULL AND g.t < m.max_t - 10801000000)
             ORDER BY click_id NULLS FIRST, signup_id NULLS FIRST"""))
 
-  /** Streaming distinct-users KMV sketch — the BOUNDED-state form of
-    * streaming cardinality (the question every live dashboard asks:
-    * "distinct users per type so far"): per event_type, the O(k) sorted
-    * KMV minima array rides `mapGroupsWithState` across micro-batches —
-    * state NEVER grows past k longs per key where exact streaming
-    * distinct state grows with the user count (the difference between
-    * 64×8 bytes and gigabytes per key at 100 TB). The same
-    * [[graft.functions.KmvBuf]] primitives back the batch sketch, so
-    * stream state ≡ batch sketch by construction and the integer-exact
-    * estimate oracles bit-for-bit. Each update emits (estimate, update
-    * serial); the final state per key is selected by `max_by` on the
-    * serial — the KMV estimate itself is not strictly monotone at the
-    * exact→saturated boundary, so "max estimate" would be wrong.
-    */
   /** The op body with the replay granularity exposed ([[StreamingSpec]]
     * replays with maxFilesPerTrigger = 1 so the state tuple genuinely
     * round-trips the state store across micro-batches; the registered op
@@ -693,6 +679,20 @@ object StreamingOps {
         .orderBy(asc_nulls_first("event_type"))
   }
 
+  /** Streaming distinct-users KMV sketch — the BOUNDED-state form of
+    * streaming cardinality (the question every live dashboard asks:
+    * "distinct users per type so far"): per event_type, the O(k) sorted
+    * KMV minima array rides `mapGroupsWithState` across micro-batches —
+    * state NEVER grows past k longs per key where exact streaming
+    * distinct state grows with the user count (the difference between
+    * 64×8 bytes and gigabytes per key at 100 TB). The same
+    * [[graft.functions.KmvBuf]] primitives back the batch sketch, so
+    * stream state ≡ batch sketch by construction and the integer-exact
+    * estimate oracles bit-for-bit. Each update emits (estimate, update
+    * serial); the final state per key is selected by `max_by` on the
+    * serial — the KMV estimate itself is not strictly monotone at the
+    * exact→saturated boundary, so "max estimate" would be wrong.
+    */
   val streamDistinctUsersKmv: Q = Q(
     "stream_distinct_users_kmv",
     (s, d) => streamDistinctUsersKmvFrames(s, d),

@@ -26,10 +26,19 @@ fraction of the parent's median):
 Gain holds: at least 10 pairs were run, the change wins at least 90% of
 them and its median beats the parent's by more than the parent's
 interquartile range. Quartiles interpolate linearly between order
-statistics. A run that exits non-zero is recorded as failed, with no
-metrics; it and a run with "correct": false or failed operations count as
-lost by their side. `--out` is rewritten after every run, so a failure
-never loses the pairs before it.
+statistics.
+
+Before the first pair, each checkout's perfbench class data archive
+(.perfbench_build/classes.jsa) must load with `java -Xshare:on`, or the
+script stops and names the checkout: the archive is valid only for the jars
+it was trained on, and after any later sbt run in that checkout every
+perfbench JVM silently starts without it. A checkout with no build yet is
+checked after its first run, which builds it.
+
+A run that exits non-zero is recorded as failed, with no metrics; it and a
+run with "correct": false or failed operations count as lost by their side.
+`--out` is rewritten after every run, so a failure never loses the pairs
+before it.
 """
 import argparse
 import json
@@ -51,6 +60,32 @@ def run_once(checkout, workload, seed, seconds):
         return {"correct": False, "failed": None, "attempted": None,
                 "exit": p.returncode, "metrics": {}}
     return json.loads(lines[-1])
+
+
+def archive_error(checkout):
+    """Why the checkout's perfbench JVMs would start without its class data
+    archive, or None. The archive is valid only for the jars it was trained
+    on, and any later sbt run in the checkout re-packages them; perfbench
+    then starts every JVM without it, which no run reports."""
+    build = os.path.join(checkout, ".perfbench_build")
+    archive = os.path.join(build, "classes.jsa")
+    cp_file = os.path.join(build, "classpath.txt")
+    if not (os.path.exists(archive) and os.path.exists(cp_file)):
+        return "no class data archive in .perfbench_build"
+    with open(cp_file) as fh:
+        cp = fh.read().strip()
+    p = subprocess.run(["java", "-Xshare:on", f"-XX:SharedArchiveFile={archive}", "-cp", cp,
+                        "-version"], cwd=checkout, stdin=subprocess.DEVNULL,
+                       stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True)
+    return None if p.returncode == 0 else p.stdout.strip()[-1000:]
+
+
+def check_archive(checkout):
+    err = archive_error(checkout)
+    if err:
+        sys.exit(f"ab: {checkout}: its perfbench class data archive does not load, so its "
+                 f"JVMs would start without it; rebuild it (delete .perfbench_build) and "
+                 f"rerun.\n{err}")
 
 
 def quartiles(xs):
@@ -79,11 +114,24 @@ def main():
         bench = json.load(fh)
     metrics, seconds = bench["end_to_end"], bench["run_seconds"]
 
+    # a checkout that has not built yet gets its archive on its first run,
+    # and is checked right after it
+    unchecked = set()
+    for side in ("parent", "change"):
+        checkout = getattr(a, side)
+        if os.path.exists(os.path.join(checkout, ".perfbench_build", "stamp")):
+            check_archive(checkout)
+        else:
+            unchecked.add(side)
+
     runs = {"parent": [], "change": []}
     for i, seed in enumerate(seeds):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         for side in order:
             r = run_once(getattr(a, side), a.workload, seed, seconds)
+            if side in unchecked:
+                check_archive(getattr(a, side))
+                unchecked.discard(side)
             r["seed"] = seed
             runs[side].append(r)
             shown = {m["name"]: round(r["metrics"][m["name"]]["value"], 1)
