@@ -22,6 +22,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - `phases_ms`: the Catalyst phases of that write's `QueryExecution`;
   *  - `stage`: the pass's task metrics ([[Bench.RepMetrics]]);
   *  - `batches`: every streaming progress JSON posted during the pass;
+  *  - `forks`: processes the JVM started during the pass
+  *    ([[graft.util.ProcessStarts]]);
   *  - `plan`: the write's final adaptive plan, formatted mode.
   *
   * Conf A/Bs need no options: `-Dspark.<key>=<value>` in `run/javaOptions`
@@ -68,29 +70,31 @@ object Profile {
       org.apache.spark.graft.ListenerDrain.drain(sc)
       probe.reset()
       progress.batches.clear()
-      val t0 = System.nanoTime()
-      val df = fn(spark, dir)
-      val t1 = System.nanoTime()
       val last = new LastExecution
-      df.sparkSession.listenerManager.register(last)
-      val t2 = try {
-        df.write.format("noop").mode("overwrite").save()
-        System.nanoTime()
-      } finally {
-        // the bus is async: drain so the pass's task ends, progress
-        // events and the write's execution are all delivered
-        org.apache.spark.graft.ListenerDrain.drain(sc)
-        df.sparkSession.listenerManager.unregister(last)
+      val ((df, t0, t1, t2), forks) = graft.util.ProcessStarts.count {
+        val t0 = System.nanoTime()
+        val df = fn(spark, dir)
+        val t1 = System.nanoTime()
+        df.sparkSession.listenerManager.register(last)
+        try {
+          df.write.format("noop").mode("overwrite").save()
+          (df, t0, t1, System.nanoTime())
+        } finally {
+          // the bus is async: drain so the pass's task ends, progress
+          // events and the write's execution are all delivered
+          org.apache.spark.graft.ListenerDrain.drain(sc)
+          df.sparkSession.listenerManager.unregister(last)
+        }
       }
       val qe = last.qe.getOrElse(df.queryExecution)
       val phases = qe.tracker.phases.toSeq.sortBy(_._1)
         .map { case (p, s) => s"${Verify.jsonString(p)}:${s.durationMs}" }
         .mkString("{", ",", "}")
       emit(String.format(java.util.Locale.ROOT,
-        """{"query":%s,"pass":"%s","construct_s":%.3f,"materialize_s":%.3f,"phases_ms":%s,"stage":%s,"batches":%s,"plan":%s}""",
+        """{"query":%s,"pass":"%s","construct_s":%.3f,"materialize_s":%.3f,"phases_ms":%s,"stage":%s,"batches":%s,"forks":%d,"plan":%s}""",
         Verify.jsonString(name), pass, Double.box((t1 - t0) / 1e9),
         Double.box((t2 - t1) / 1e9), phases, probe.snapshot().json,
-        progress.batches.asScala.mkString("[", ",", "]"),
+        progress.batches.asScala.mkString("[", ",", "]"), Int.box(forks),
         Verify.jsonString(qe.explainString(FormattedMode))))
     } finally {
       sc.removeSparkListener(probe)

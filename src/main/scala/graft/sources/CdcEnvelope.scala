@@ -56,10 +56,6 @@ object CdcEnvelope {
     df.select(from_json(jsonCol, decodeSchema(payload)).as("env"))
       .select(payloadColumns(payload, microTsCols): _*)
 
-  /** Convenience: decode reference `iman.users` envelopes. */
-  def unwrapUsers(df: DataFrame, jsonCol: Column): DataFrame =
-    unwrap(df, jsonCol, usersPayload, Seq("updated_at", "created_at"))
-
   /** Bad-record-tolerant decode (the reference's `errors.tolerance=all` +
     * dead-letter logging, `setup.sh:145-147`): rows whose envelope fails to
     * parse or carries no payload are routed to a quarantine DataFrame

@@ -33,49 +33,31 @@ object StreamRunner {
     * in [[Memo]] (no corpus: the tuning is corpus-independent), so it is
     * dropped with its parent; the child holds no reference back to the
     * parent (only the shared SparkContext), so the entry never pins it.
+    *
+    * Checkpoint files go through [[LocalCheckpointFileManager]]
+    * (`spark.sql.streaming.checkpointFileManagerClass`), which on local
+    * disk writes each metadata-log and state-store file with no forked
+    * process and no `.crc` sibling; Spark's own checksum file
+    * (`spark.sql.streaming.checkpoint.fileChecksum.enabled`) is off too.
+    * Every checkpoint these ops create is scratch under `TempDirs` that
+    * lives for one drain, so neither checksum guards anything. Both are
+    * confs of the child alone: the SparkContext's Hadoop conf and every
+    * other session keep Spark's defaults. A deployment with durable
+    * checkpoints sets the keys on the parent session, for example
+    * `FileContextBasedCheckpointFileManager` (Spark's default manager) and
+    * checksums `true`, and the child takes the parent's value: `getAll`
+    * lists only explicitly set entries, never defaults.
     */
   private[streaming] def tunedSession(s: SparkSession): SparkSession =
     Memo.session(s, "", "tuned_session") {
       val child = s.newSession()
       val parent = s.conf.get("spark.sql.shuffle.partitions", "8").toInt
       child.conf.set("spark.sql.shuffle.partitions", math.min(8, parent).toString)
-      // Spark 4.1 writes + verifies a sibling .crc checksum file for every
-      // checkpoint file (offsets, commits, every state-store delta —
-      // spark.sql.streaming.checkpoint.fileChecksum.enabled, default on):
-      // corruption detection for long-lived checkpoints on unreliable
-      // storage. Every checkpoint these ops create is ephemeral per-run
-      // scratch under TempDirs, so the checksums double the per-batch
-      // small-file count for data whose lifetime is one AvailableNow
-      // drain. Off by default here; a parent session that SET the conf
-      // explicitly (a deployment with durable checkpoints) wins — getAll
-      // lists only explicitly-set entries, never defaults.
-      val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-      if (!s.conf.getAll.contains(ckKey)) child.conf.set(ckKey, "false")
-      // One layer below Spark's checksums, Hadoop's LOCAL filesystem
-      // (file:// — ChecksumFs via the FileContext the checkpoint manager
-      // uses) writes a sibling ".<name>.crc" for every checkpoint file
-      // and re-verifies it on every read: measured on the full-outer
-      // join, 76 of the 152 files one run creates are .crc siblings —
-      // client-side checksumming that does not exist on HDFS/S3
-      // checkpoints (their integrity is storage-level). Route local
-      // checkpoints through the raw (non-checksummed) local Fs instead.
-      // The AbstractFileSystem binding is only honored from the
-      // CONTEXT-level Hadoop conf (a session-level spark.hadoop.*
-      // override measurably does not reach the checkpoint manager), so
-      // it is set there — scoped in effect to FileContext users, which
-      // in this engine is exactly the streaming checkpoint machinery;
-      // batch parquet I/O rides the FileSystem API binding (fs.file.impl)
-      // and is untouched. A deployment that configured the impl
-      // explicitly (client-side checksums on local staging disks) wins,
-      // even when it names the default LocalFs: only a value that comes
-      // from Hadoop's own core-default.xml, or none, is replaced.
-      val fsKey = "fs.AbstractFileSystem.file.impl"
-      val hc = s.sparkContext.hadoopConfiguration
-      // (`unset` keeps a key's sources, so check the value too)
-      val explicit = hc.get(fsKey) != null &&
-        Option(hc.getPropertySources(fsKey)).exists(_.exists(_ != "core-default.xml"))
-      if (!s.conf.getAll.contains(s"spark.hadoop.$fsKey") && !explicit)
-        hc.set(fsKey, "org.apache.hadoop.fs.local.RawLocalFs")
+      val explicit = s.conf.getAll
+      for ((k, v) <- Seq(
+          "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+          "spark.sql.streaming.checkpointFileManagerClass" -> classOf[LocalCheckpointFileManager].getName))
+        child.conf.set(k, explicit.getOrElse(k, v))
       child
     }
 

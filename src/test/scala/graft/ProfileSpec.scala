@@ -21,6 +21,7 @@ class ProfileSpec extends SparkSpec {
       assert(r.get("plan").asText.contains("isFinalPlan=true"), q)
       assert(r.get("phases_ms").has("planning"), q)
       assert(r.get("stage").has("max_task_ms"), q)
+      assert(r.get("forks").isInt && r.get("forks").asInt >= 0, q)
     }
     val (batch, stream) = recs.partition(_.get("query").asText == "agg_hash_groupby")
     batch.foreach(r => assert(r.get("batches").size == 0))

@@ -28,10 +28,10 @@ class CdcEnvelopeSpec extends SparkSpec {
       |"updated_at":1754155842030174,"created_at":1754155842030174}}""".stripMargin
       .replaceAll("\n", "")
 
-  test("unwrapUsers decodes the captured README.md:127 message") {
+  test("unwrap decodes the captured README.md:127 users message") {
     import spark.implicits._
-    val row = CdcEnvelope.unwrapUsers(Seq(captured).toDF("value"), col("value"))
-      .head()
+    val row = CdcEnvelope.unwrap(Seq(captured).toDF("value"), col("value"),
+      CdcEnvelope.usersPayload, tsCols).head()
     assert(row.getAs[Int]("user_id") == 1)
     assert(row.getAs[String]("username") == "user1")
     assert(row.getAs[String]("account_type") == "Bronze")
@@ -61,8 +61,8 @@ class CdcEnvelopeSpec extends SparkSpec {
 
   test("tombstone-shaped / malformed JSON decodes to null payload, not error") {
     import spark.implicits._
-    val rows = CdcEnvelope.unwrapUsers(Seq("", "not json").toDF("value"), col("value"))
-      .collect()
+    val rows = CdcEnvelope.unwrap(Seq("", "not json").toDF("value"), col("value"),
+      CdcEnvelope.usersPayload, tsCols).collect()
     assert(rows.length == 2)
     assert(rows.forall(r => r.isNullAt(r.fieldIndex("user_id"))))
   }

@@ -1,59 +1,141 @@
 package graft.streaming
 
-import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path => JPath}
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{AbstractFileSystem, FileSystem, LocalFileSystem}
-import org.apache.hadoop.fs.local.RawLocalFs
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
+  FileContextBasedCheckpointFileManager, HDFSMetadataLog}
+import org.apache.spark.sql.functions.{count, expr, lit}
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.SparkSpec
+import graft.util.{ProcessStarts, TempDirs}
 
-/** Guards the one JVM-global side effect of [[StreamRunner.tunedSession]]:
-  * it rebinds the context-level Hadoop conf's `file` AbstractFileSystem
-  * (the FileContext API the checkpoint manager uses) to the raw local Fs.
-  * Batch I/O rides the FileSystem API and must stay checksummed, and a
-  * binding someone set explicitly must survive.
+/** The tuned streaming session writes its checkpoints through
+  * [[LocalCheckpointFileManager]], as a conf of that session alone: a
+  * checkpoint write forks no process, every other session and the
+  * SparkContext's Hadoop conf keep Spark's defaults, and a checkpoint
+  * written by either manager resumes under the other.
   */
 class TunedSessionSpec extends SparkSpec {
 
-  private val fsKey = "fs.AbstractFileSystem.file.impl"
-  private val localFs = "org.apache.hadoop.fs.local.LocalFs"
-  private val file = new URI("file:///")
+  private val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
-  /** Run `body` with the key cleared, then put back its value and source. */
-  private def withFsKeyCleared(body: Configuration => Unit): Unit = {
+  private def manager(s: SparkSession, dir: JPath): CheckpointFileManager =
+    CheckpointFileManager.create(new Path(dir.toUri), castToImpl(s).sessionState.newHadoopConf())
+
+  test("a tuned session's checkpoint write starts no process") {
+    // the counter sees a process this JVM starts
+    assert(ProcessStarts.count(new ProcessBuilder("true").start().waitFor())._2 == 1)
+    val dir = TempDirs.create("ckpt_forks")
+    val fm = manager(StreamRunner.tunedSession(spark.newSession()), dir)
+    assert(fm.isInstanceOf[LocalCheckpointFileManager], fm.getClass.getName)
+    val file = new Path(dir.resolve("offsets").resolve("0").toUri)
+    val (_, forks) = ProcessStarts.count {
+      fm.mkdirs(file.getParent)
+      val out = fm.createAtomic(file, overwriteIfPossible = false)
+      out.write("v1".getBytes(UTF_8))
+      out.close()
+    }
+    assert(forks == 0)
+    assert(fm.list(file.getParent).map(_.getPath.getName).toSeq == Seq("0"))
+    val in = fm.open(file)
+    try assert(new String(in.readAllBytes(), UTF_8) == "v1") finally in.close()
+  }
+
+  test("sibling session and context Hadoop conf keep Spark defaults") {
     val hc = spark.sparkContext.hadoopConfiguration
-    val saved = Option(hc.get(fsKey)).map(v => v -> hc.getPropertySources(fsKey).last)
-    hc.unset(fsKey)
-    try body(hc)
-    finally saved match {
-      case Some((v, src)) => hc.set(fsKey, v, src)
-      case None => hc.unset(fsKey)
-    }
+    val before = hc.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
+    StreamRunner.tunedSession(spark.newSession())
+    val fm = manager(spark.newSession(), TempDirs.create("ckpt_sibling"))
+    assert(fm.isInstanceOf[FileContextBasedCheckpointFileManager], fm.getClass.getName)
+    assert(hc.iterator.asScala.map(e => e.getKey -> e.getValue).toMap == before)
   }
 
-  test("Hadoop's own default binding is what tunedSession may replace") {
-    val fresh = new Configuration()
-    assert(fresh.get(fsKey) == localFs)
-    assert(fresh.getPropertySources(fsKey).toSeq == Seq("core-default.xml"))
+  test("a parent's explicit checkpoint confs reach the child") {
+    val parent = spark.newSession()
+    val own = Map(managerKey -> classOf[FileContextBasedCheckpointFileManager].getName,
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "true")
+    own.foreach { case (k, v) => parent.conf.set(k, v) }
+    val child = StreamRunner.tunedSession(parent)
+    own.foreach { case (k, v) => assert(child.conf.get(k) == v, k) }
   }
 
-  test("tunedSession binds file:// FileContext to RawLocalFs; FileSystem stays checksummed") {
-    withFsKeyCleared { hc =>
-      StreamRunner.tunedSession(spark.newSession())
-      val fs = FileSystem.newInstance(file, hc)
-      try assert(fs.isInstanceOf[LocalFileSystem], fs.getClass.getName)
-      finally fs.close()
-      val afs = AbstractFileSystem.get(file, hc)
-      assert(afs.isInstanceOf[RawLocalFs], afs.getClass.getName)
-    }
+  test("a crash between temp write and rename leaves the log valid") {
+    val tuned = castToImpl(StreamRunner.tunedSession(spark.newSession()))
+    val dir = TempDirs.create("ckpt_crash").resolve("log")
+    val log = new HDFSMetadataLog[String](tuned, dir.toString)
+    assert(log.add(0L, "zero"))
+    // the temp file of batch 1, written and never renamed
+    Files.write(dir.resolve(s".1.${java.util.UUID.randomUUID}.tmp"), "half".getBytes(UTF_8))
+    val reopened = new HDFSMetadataLog[String](tuned, dir.toString)
+    assert(reopened.getLatest().map(_._1).contains(0L))
+    assert(reopened.get(0L).contains("zero"))
+    assert(reopened.add(1L, "one"))
+    assert(!reopened.add(1L, "again"))
+    assert(reopened.get(1L).contains("one"))
   }
 
-  test("tunedSession keeps an explicitly set binding, even the default LocalFs") {
-    withFsKeyCleared { hc =>
-      hc.set(fsKey, localFs)
-      StreamRunner.tunedSession(spark.newSession())
-      assert(hc.get(fsKey) == localFs)
-    }
+  private val HourNs = 3600000000000L
+  private val schema = StructType(Seq(StructField("ts", LongType)))
+
+  /** File `i` of the stream: 3 + i events, spread over hours i and i + 1. */
+  private def writeFile(src: JPath, i: Int): DataFrame = {
+    import spark.implicits._
+    val rows = (0 until 3 + i).map(j => (i + j % 2) * HourNs + j.toLong).toDF("ts")
+    val tmp = src.resolveSibling(s"tmp_$i")
+    rows.coalesce(1).write.parquet(tmp.toString)
+    val part = tmp.toFile.list().find(_.endsWith(".parquet")).get
+    Files.move(tmp.resolve(part), src.resolve(f"part-$i%02d.parquet"))
+    rows
   }
+
+  /** The `stream_tumbling_count` shape, one file a batch, until the source
+    * is drained; returns the last complete-mode result.
+    */
+  private def hourlyCounts(parent: SparkSession, src: JPath, ckpt: JPath): Set[Row] = {
+    var last = Set.empty[Row]
+    val q = StreamRunner.tunedSession(parent).readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(src.toString)
+      .groupBy(expr(s"ts div $HourNs").as("bucket")).agg(count(lit(1)).as("cnt"))
+      .writeStream.outputMode("complete").option("checkpointLocation", ckpt.toString)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch((b: DataFrame, _: Long) => last = b.collect().toSet)
+      .start()
+    q.awaitTermination()
+    last
+  }
+
+  private def crcFiles(dir: JPath): Seq[JPath] = {
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala.filter(_.getFileName.toString.endsWith(".crc")).toSeq
+    finally walk.close()
+  }
+
+  // a stateful query's checkpoint written by either manager resumes under
+  // the engine's manager
+  for ((first, defaultFirst) <- Seq("Spark's default manager" -> true, "the engine's manager" -> false))
+    test(s"a stateful checkpoint of $first resumes") {
+      val base = TempDirs.create("ckpt_compat")
+      val (src, ckpt) = (base.resolve("src"), base.resolve("ckpt"))
+      Files.createDirectories(src)
+      val firstParent = spark.newSession()
+      if (defaultFirst)
+        firstParent.conf.set(managerKey, classOf[FileContextBasedCheckpointFileManager].getName)
+      val written = Seq(writeFile(src, 0), writeFile(src, 1))
+      hourlyCounts(firstParent, src, ckpt)
+      assert(crcFiles(ckpt).nonEmpty == defaultFirst)
+      val all = written :+ writeFile(src, 2)
+      val resumed = hourlyCounts(spark.newSession(), src, ckpt)
+      val batch = all.reduce(_ union _).groupBy(expr(s"ts div $HourNs").as("bucket"))
+        .agg(count(lit(1)).as("cnt")).collect().toSet
+      assert(resumed == batch)
+      assert(ckpt.resolve("commits").toFile.list().count(_.forall(_.isDigit)) == 3)
+    }
 }
