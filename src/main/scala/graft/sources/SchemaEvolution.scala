@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * (reference `setup.sh:134-135`): when the source grows a column, the
   * sink table is ALTERed and old rows read as NULL.
   *
-  * Spark mapping: schemas are `StructType`s; evolution = the ADD COLUMN
-  * DDL for the sink (ClickHouse dialect via [[TypeMap]]) plus `conform`,
+  * Spark mapping: schemas are `StructType`s; evolution = the columns to
+  * ADD to the sink (`missingColumns`, typed by [[TypeMap]]) plus `conform`,
   * which widens any batch to the evolved schema with NULL back-fill — the
   * same result `spark.read.option("mergeSchema", true)` produces across
   * parquet files with drifting schemas. Evolution here is additive-only,
@@ -21,13 +21,6 @@ object SchemaEvolution {
   /** Fields present in `incoming` but absent from `target` (by name). */
   def missingColumns(target: StructType, incoming: StructType): Seq[StructField] =
     incoming.fields.toSeq.filterNot(f => target.fieldNames.contains(f.name))
-
-  /** ALTER TABLE DDL bringing the sink up to `incoming` (additive only). */
-  def alterDdl(schema: String, table: String,
-               target: StructType, incoming: StructType): Seq[String] =
-    missingColumns(target, incoming).map(f =>
-      s"ALTER TABLE $schema.$table ADD COLUMN IF NOT EXISTS " +
-        s"${f.name} ${TypeMap.sparkToClickHouse(f.dataType)};")
 
   /** Evolved sink schema: target plus whatever incoming added. */
   def evolve(target: StructType, incoming: StructType): StructType =

@@ -1,19 +1,13 @@
 package graft.streaming
 
-import java.io.{BufferedOutputStream, FileNotFoundException}
-import java.nio.ByteBuffer
-import java.nio.channels.FileChannel
-import java.nio.file.{Files, NoSuchFileException, Path => JPath, Paths, StandardCopyOption}
-import java.util.UUID
-
-import scala.util.control.NonFatal
+import java.io.{File, FileNotFoundException}
+import java.net.URI
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{BufferedFSInputStream, FileAlreadyExistsException, FileStatus,
-  FileSystem, FileUtil, FSDataInputStream, FSInputStream, Path, PathFilter}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path, PathFilter, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
-  FileContextBasedCheckpointFileManager}
-import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
+  FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 
 /** The checkpoint file manager of the tuned streaming session
   * ([[StreamRunner.tunedSession]]): every metadata-log write (`offsets`,
@@ -22,111 +16,54 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *
   * Hadoop's local file system forks a shell process for `chmod`,
   * `readlink` or `stat` when it has no native library: Spark's default
-  * manager makes 10 such forks per checkpoint write, about 28 ms. This
-  * manager does `file:` paths through `java.nio` on the raw local file
-  * system instead and starts no process:
-  *  - a temp file is created with the umask's default permissions;
-  *  - temp → final is one atomic rename; without `overwriteIfPossible` an
-  *    existing final file fails it with `FileAlreadyExistsException`, the
-  *    check Spark's FileSystem-based manager makes;
-  *  - no `.crc` sibling is written or verified, and listings hide the ones
-  *    an earlier manager left, so such a checkpoint resumes here. A rename
-  *    or delete removes the stale sibling of its file, so Spark's default
-  *    manager can read the checkpoint again.
-  * Any other scheme goes to Spark's `FileContextBasedCheckpointFileManager`.
-  * Spark builds the class through this `(Path, Configuration)` constructor.
+  * manager makes 10 such forks per checkpoint write, about 28 ms. For
+  * `file:` paths this is Spark's own FileSystem-based manager (temp file,
+  * then one atomic rename, with its `overwriteIfPossible` checks) over
+  * [[LocalCheckpointFileManager.ForkFreeFs]], which starts no process and
+  * writes or checks no `.crc` sibling. Any other scheme goes to Spark's
+  * `FileContextBasedCheckpointFileManager`. Spark builds the class through
+  * this `(Path, Configuration)` constructor.
   */
 class LocalCheckpointFileManager(path: Path, conf: Configuration) extends CheckpointFileManager {
-  import LocalCheckpointFileManager._
+  private val fm: CheckpointFileManager =
+    if (Option(path.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme) != "file")
+      new FileContextBasedCheckpointFileManager(path, conf)
+    else new FileSystemBasedCheckpointFileManager(path, conf) {
+      override protected val fs: FileSystem = new LocalCheckpointFileManager.ForkFreeFs(conf)
+    }
 
-  private val remote: Option[CheckpointFileManager] =
-    if (Option(path.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme) == "file") None
-    else Some(new FileContextBasedCheckpointFileManager(path, conf))
-
-  override def createAtomic(p: Path, overwriteIfPossible: Boolean): CancellableFSDataOutputStream =
-    remote.fold[CancellableFSDataOutputStream] {
-      Files.createDirectories(local(p).getParent)
-      new AtomicOutput(local(p), overwriteIfPossible)
-    }(_.createAtomic(p, overwriteIfPossible))
-
-  override def open(p: Path): FSDataInputStream = remote.fold {
-    val ch = try FileChannel.open(local(p))
-      catch { case e: NoSuchFileException => throw new FileNotFoundException(e.getMessage) }
-    new FSDataInputStream(new BufferedFSInputStream(new ChannelInput(ch), 1 << 16))
-  }(_.open(p))
-
-  override def list(p: Path, filter: PathFilter): Array[FileStatus] = remote.fold {
-    val dir = local(p).toFile
-    Option(dir.list()).getOrElse(throw new FileNotFoundException(s"$p is not a directory"))
-      .filterNot(n => n.startsWith(".") && n.endsWith(".crc"))
-      .map(n => new Path(p, n)).filter(filter.accept).map { c =>
-        val f = new java.io.File(dir, c.getName)
-        new FileStatus(f.length, f.isDirectory, 1, 1L << 25, f.lastModified, c)
-      }
-  }(_.list(p, filter))
-
-  override def mkdirs(p: Path): Unit = remote.fold[Unit](Files.createDirectories(local(p)))(_.mkdirs(p))
-
-  override def exists(p: Path): Boolean = remote.fold(Files.exists(local(p)))(_.exists(p))
-
-  override def delete(p: Path): Unit = remote.fold[Unit] {
-    FileUtil.fullyDelete(local(p).toFile)
-    Files.deleteIfExists(crcOf(local(p)))
-  }(_.delete(p))
-
-  override def isLocal: Boolean = remote.forall(_.isLocal)
-
-  override def createCheckpointDirectory(): Path = remote.fold {
-    mkdirs(path)
-    FileSystem.getLocal(conf).makeQualified(path)
-  }(_.createCheckpointDirectory())
-
-  override def close(): Unit = remote.foreach(_.close())
+  override def createAtomic(p: Path, overwriteIfPossible: Boolean) = fm.createAtomic(p, overwriteIfPossible)
+  override def open(p: Path) = fm.open(p)
+  override def list(p: Path, filter: PathFilter) = fm.list(p, filter)
+  override def mkdirs(p: Path): Unit = fm.mkdirs(p)
+  override def exists(p: Path) = fm.exists(p)
+  override def delete(p: Path): Unit = fm.delete(p)
+  override def isLocal = fm.isLocal
+  override def createCheckpointDirectory() = fm.createCheckpointDirectory()
+  override def close(): Unit = fm.close()
 }
 
 object LocalCheckpointFileManager {
-  private def local(p: Path) = Paths.get(p.toUri.getPath)
-  private def crcOf(f: JPath) = f.resolveSibling(s".${f.getFileName}.crc")
-
-  /** Writes a hidden temp file next to `dst` (Spark's own temp name) and
-    * renames it onto `dst` on close; cancel deletes it.
+  /** Hadoop's raw local file system without its two forks: a status comes
+    * from `java.io` instead of a `stat` process, and a permission is never
+    * set (no `chmod`), so files and directories keep the umask's default.
+    * A rename drops its target's `.crc` sibling, which an earlier manager
+    * may have left, so Spark's default manager can read the file again.
     */
-  private final class AtomicOutput(dst: JPath, overwriteIfPossible: Boolean, tmp: JPath)
-      extends CancellableFSDataOutputStream(new BufferedOutputStream(Files.newOutputStream(tmp))) {
-    def this(dst: JPath, overwriteIfPossible: Boolean) = this(dst, overwriteIfPossible,
-      dst.resolveSibling(s".${dst.getFileName}.${UUID.randomUUID}.tmp"))
-    private var done = false
+  private final class ForkFreeFs(conf: Configuration) extends RawLocalFileSystem {
+    initialize(URI.create("file:///"), conf)
 
-    override def close(): Unit = synchronized {
-      if (!done) {
-        done = true
-        underlyingStream.close()
-        if (!overwriteIfPossible && Files.exists(dst))
-          throw new FileAlreadyExistsException(s"$dst already exists")
-        Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-        Files.deleteIfExists(crcOf(dst))
-      }
+    override def getFileStatus(f: Path): FileStatus = {
+      val file = pathToFile(f)
+      if (!file.exists) throw new FileNotFoundException(s"File $f does not exist")
+      new FileStatus(file.length, file.isDirectory, 1, getDefaultBlockSize(f), file.lastModified, makeQualified(f))
     }
 
-    override def cancel(): Unit = synchronized {
-      if (!done) {
-        done = true
-        try underlyingStream.close() catch { case NonFatal(_) => }
-        Files.deleteIfExists(tmp)
-      }
-    }
-  }
+    override def setPermission(p: Path, permission: FsPermission): Unit = ()
 
-  /** A seekable read of one local file; Hadoop's own is package-private. */
-  private final class ChannelInput(ch: FileChannel) extends FSInputStream {
-    override def seek(pos: Long): Unit = ch.position(pos)
-    override def getPos: Long = ch.position
-    override def seekToNewSource(targetPos: Long): Boolean = false
-    override def read(b: Array[Byte], off: Int, len: Int): Int = ch.read(ByteBuffer.wrap(b, off, len))
-    override def read(): Int = {
-      val b = new Array[Byte](1)
-      if (read(b, 0, 1) < 1) -1 else b(0) & 0xff
+    override def rename(src: Path, dst: Path): Boolean = super.rename(src, dst) && {
+      new File(pathToFile(dst).getParentFile, s".${dst.getName}.crc").delete()
+      true
     }
-    override def close(): Unit = ch.close()
   }
 }

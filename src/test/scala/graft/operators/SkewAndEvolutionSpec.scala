@@ -1,12 +1,30 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.{SparkSpec, Tables}
-import graft.sources.SchemaEvolution
+import graft.sources.{SchemaEvolution, TypeMap}
 
 class SkewAndEvolutionSpec extends SparkSpec {
+
+  /** Skew-salted equi join (SURVEY §4.3 "salting for skew"): the big side
+    * gets a deterministic salt from a unique column (never `rand()`, so a
+    * retried task makes the same rows), the small side is replicated over
+    * every salt, and the join key becomes (key, salt). `join_skew_salted`
+    * is the registry cell built this way.
+    */
+  private def saltedJoin(big: DataFrame, small: DataFrame, bigKey: String, smallKey: String,
+                         bigSaltSource: Column, buckets: Int): DataFrame = {
+    val saltedBig = big.withColumn("__graft_salt", pmod(xxhash64(bigSaltSource), lit(buckets.toLong)))
+    val replicatedSmall = small.withColumn("__graft_salt",
+      explode(expr(s"sequence(0L, ${buckets - 1}L)")))
+    saltedBig.join(replicatedSmall,
+        saltedBig(bigKey) === replicatedSmall(smallKey) &&
+          saltedBig("__graft_salt") === replicatedSmall("__graft_salt"))
+      .drop("__graft_salt")
+  }
 
   test("DDL sweep emits one row per corpus table plus the golden users DDL") {
     val rows = SourceOps.opSchemaDdlTypemap.fn(spark, sf).collect()
@@ -25,7 +43,7 @@ class SkewAndEvolutionSpec extends SparkSpec {
     val plain = o.join(c, o("o_custkey") === c("c_custkey"))
       .select("o_orderkey", "c_custkey").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted
-    val salted = Skew.saltedJoin(o, c, "o_custkey", "c_custkey",
+    val salted = saltedJoin(o, c, "o_custkey", "c_custkey",
         col("o_orderkey"), buckets = 8)
       .select("o_orderkey", "c_custkey").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted
@@ -37,7 +55,7 @@ class SkewAndEvolutionSpec extends SparkSpec {
     val c = Tables.read(spark, sf, "customer")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val p = Skew.saltedJoin(o, c, "o_custkey", "c_custkey",
+      val p = saltedJoin(o, c, "o_custkey", "c_custkey",
         col("o_orderkey"), buckets = 8).queryExecution.executedPlan.toString()
       assert(p.contains("__graft_salt"), p)
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
@@ -56,7 +74,7 @@ class SkewAndEvolutionSpec extends SparkSpec {
     val plain = ev.join(dim, ev("user_id") === dim("d_key"))
       .select("event_id", "d_tag").collect()
       .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-    val salted = Skew.saltedJoin(ev, dim, "user_id", "d_key",
+    val salted = saltedJoin(ev, dim, "user_id", "d_key",
         col("event_id"), buckets = 8)
       .select("event_id", "d_tag").collect()
       .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
@@ -79,7 +97,7 @@ class SkewAndEvolutionSpec extends SparkSpec {
     // Same Zipf-headed events key as the salting test above, run through
     // Spark's OWN runtime cure: AQE's OptimizeSkewedJoin re-plans the hot
     // shuffle partition into sub-splits after the map stage publishes its
-    // sizes. This pins WHEN the manual `Skew.saltedJoin` is needed: a
+    // sizes. This pins WHEN the manual `saltedJoin` is needed: a
     // plain shuffle JOIN on a skewed key is AQE's case — no salt required
     // at any scale, just skew-join left enabled. The salt remains the
     // only cure where AQE cannot act: skewed AGGREGATIONS (no join to
@@ -148,7 +166,8 @@ class SkewAndEvolutionSpec extends SparkSpec {
       StructField("email", StringType), StructField("score", DoubleType)))
 
     assert(SchemaEvolution.missingColumns(v1, v2).map(_.name) == Seq("email", "score"))
-    assert(SchemaEvolution.alterDdl("iman", "users", v1, v2) == Seq(
+    assert(SchemaEvolution.missingColumns(v1, v2).map(f =>
+      s"ALTER TABLE iman.users ADD COLUMN IF NOT EXISTS ${f.name} ${TypeMap.sparkToClickHouse(f.dataType)};") == Seq(
       "ALTER TABLE iman.users ADD COLUMN IF NOT EXISTS email String;",
       "ALTER TABLE iman.users ADD COLUMN IF NOT EXISTS score Float64;"))
     assert(SchemaEvolution.missingColumns(v2, v1).isEmpty) // additive only

@@ -5,11 +5,12 @@ import java.nio.file.{Files, Path => JPath}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
   FileContextBasedCheckpointFileManager, HDFSMetadataLog}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{count, expr, lit}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -33,6 +34,9 @@ class TunedSessionSpec extends SparkSpec {
   test("a tuned session's checkpoint write starts no process") {
     // the counter sees a process this JVM starts
     assert(ProcessStarts.count(new ProcessBuilder("true").start().waitFor())._2 == 1)
+    // as once any session uses Spark's default manager: from then on Hadoop's
+    // raw local file system answers every status with a forked `stat`
+    RawLocalFileSystem.useStatIfAvailable()
     val dir = TempDirs.create("ckpt_forks")
     val fm = manager(StreamRunner.tunedSession(spark.newSession()), dir)
     assert(fm.isInstanceOf[LocalCheckpointFileManager], fm.getClass.getName)
@@ -47,6 +51,45 @@ class TunedSessionSpec extends SparkSpec {
     assert(fm.list(file.getParent).map(_.getPath.getName).toSeq == Seq("0"))
     val in = fm.open(file)
     try assert(new String(in.readAllBytes(), UTF_8) == "v1") finally in.close()
+  }
+
+  test("a stateful query's checkpoint and state store start no process") {
+    RawLocalFileSystem.useStatIfAvailable()
+    val tuned = StreamRunner.tunedSession(spark.newSession())
+    val input = MemoryStream[Long](Encoders.scalaLong, tuned)
+    var last = Set.empty[Row]
+    val ckpt = TempDirs.create("ckpt_state_forks")
+    val (_, forks) = ProcessStarts.count {
+      val q = input.toDF().groupBy(expr("value % 3").as("k")).agg(count(lit(1)).as("cnt"))
+        .writeStream.outputMode("complete").option("checkpointLocation", ckpt.toString)
+        .foreachBatch((b: DataFrame, _: Long) => last = b.collect().toSet)
+        .start()
+      try for (batch <- Seq(1L to 4L, 5L to 9L)) {
+        input.addData(batch)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    assert(last == Set(Row(0L, 3L), Row(1L, 3L), Row(2L, 3L)))
+    assert(ckpt.resolve("state").toFile.exists)
+    assert(forks == 0)
+  }
+
+  test("a file the engine's manager overwrites reads again under Spark's default") {
+    val dir = TempDirs.create("ckpt_stale_crc")
+    val file = new Path(dir.resolve("1.delta").toUri)
+    val default = manager(spark.newSession(), dir)
+    val tuned = manager(StreamRunner.tunedSession(spark.newSession()), dir)
+    def write(fm: CheckpointFileManager, text: String): Unit = {
+      val out = fm.createAtomic(file, overwriteIfPossible = true)
+      out.write(text.getBytes(UTF_8))
+      out.close()
+    }
+    write(default, "first")
+    assert(crcFiles(dir).nonEmpty)
+    write(tuned, "second, longer")
+    assert(crcFiles(dir).isEmpty)
+    val in = default.open(file)
+    try assert(new String(in.readAllBytes(), UTF_8) == "second, longer") finally in.close()
   }
 
   test("sibling session and context Hadoop conf keep Spark defaults") {
